@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object ChessPipeline {
 
-  /** Resource-shipped Lichess-shaped sample, materialized to a local file
-    * so both Spark and the DuckDB oracle can read it.
+  /** Resource-shipped Lichess-shaped sample, copied once per JVM to a
+    * file of its own (deleted on exit) so both Spark and the DuckDB
+    * oracle can read it while other JVMs do the same.
     */
-  def samplePath: String = {
-    val target = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_lichess_sample.ndjson")
+  lazy val samplePath: String = {
+    val target = java.nio.file.Files.createTempFile("graft_lichess_sample", ".ndjson")
+    target.toFile.deleteOnExit()
     val in = getClass.getResourceAsStream("/graft/lichess_sample.ndjson")
     require(in != null, "lichess_sample.ndjson missing from classpath")
     try java.nio.file.Files.copy(in, target,
@@ -31,11 +32,13 @@ object ChessPipeline {
 
   /** R7+R8+R9: filter mate+standard, project/flatten the 7 fields, and
     * switch to the typed Dataset — the reference's `.rdd.map(parse_game)`
-    * is just an Encoder here (no engine escape, codegen survives).
+    * is just an Encoder here (no engine escape, codegen survives). Batch
+    * and streaming `games` alike.
     */
-  def puzzleGames(spark: SparkSession, path: String): Dataset[PuzzleGame] = {
+  private def toPuzzleGames(games: DataFrame): Dataset[PuzzleGame] = {
+    val spark = games.sparkSession
     import spark.implicits._
-    readGames(spark, path)
+    games
       .filter(col("status") === "mate" && col("variant") === "standard")
       .select(
         col("id").as("game_id"),
@@ -47,6 +50,10 @@ object ChessPipeline {
         col("moves"))
       .as[PuzzleGame]
   }
+
+  /** The puzzle games of the NDJSON at `path`. */
+  def puzzleGames(spark: SparkSession, path: String): Dataset[PuzzleGame] =
+    toPuzzleGames(readGames(spark, path))
 
   /** R10: end-to-end batch run, NDJSON in → .pgn text out. */
   def run(spark: SparkSession, inputPath: String, outDir: String): Unit =
@@ -80,17 +87,8 @@ object ChessPipeline {
   def runStream(spark: SparkSession, rawDir: String, outDir: String,
       checkpointDir: String): Unit = {
     import spark.implicits._
-    val games = spark.readStream.schema(ChessModel.gameSchema).json(rawDir)
-      .filter(col("status") === "mate" && col("variant") === "standard")
-      .select(
-        col("id").as("game_id"),
-        col("players.white.user.name").as("white_name"),
-        col("players.black.user.name").as("black_name"),
-        col("opening.eco").as("opening_eco"),
-        col("opening.name").as("opening_name"),
-        col("winner"),
-        col("moves"))
-      .as[PuzzleGame]
+    val games = toPuzzleGames(
+      spark.readStream.schema(ChessModel.gameSchema).json(rawDir))
     val rendered = games.mapPartitions { it =>
       var n = 0L
       it.map { g => n += 1; Pgn.render(g, n) }

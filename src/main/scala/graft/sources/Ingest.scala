@@ -258,7 +258,8 @@ object Ingest {
       ChessPipeline.run(s, ChessPipeline.samplePath, out)
       s.read.text(out)
         .agg(count(lit(1)).as("n_lines"),
-          sum(when(col("value").startsWith("[Game ID"), 1).otherwise(0)).as("n_games"))
+          sum(when(col("value").startsWith("[" + Pgn.tags.head._2), 1).otherwise(0))
+            .as("n_games"))
     }),
 
     // S7b: PGN DSv2 ROUND TRIP — write format("pgn"), read it back

@@ -1,6 +1,8 @@
 package graft.sources.pgn
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
+import graft.sources.Pgn
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,8 +11,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 write-only `format("pgn")` (SURVEY §4.3's optional S7
-  * ergonomics): `puzzleGames.toDF.write.format("pgn").save(dir)`.
+/** DataSource V2 `format("pgn")` (SURVEY §4.3's optional S7 ergonomics):
+  * `puzzleGames.toDF.write.format("pgn").mode("overwrite").save(dir)`.
   *
   * Each task writes one standalone .pgn file through a temp-file +
   * commit-rename protocol (idempotent under task retry — the committer
@@ -18,30 +20,26 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * R10). Game numbering restarts per file, matching the reference's
   * per-output-file `[Game N]` semantics without its cross-partition
   * interleaving race; `graft.sources.Pgn.renderAll` remains the path for
-  * globally-numbered single collections.
+  * globally-numbered single collections. Only `overwrite` is supported:
+  * once every task has committed, the job commit deletes everything
+  * else in the directory.
   */
 class PgnDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgn"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PgnDataSource.schema
+    Pgn.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new PgnTable(properties.get("path"))
 }
 
-object PgnDataSource {
-  val schema: StructType = StructType(Seq(
-    "game_id", "white_name", "black_name", "opening_eco",
-    "opening_name", "winner", "moves").map(StructField(_, StringType)))
-}
-
 private[pgn] class PgnTable(path: String) extends Table
     with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsRead {
   override def name(): String = s"pgn:$path"
-  override def schema(): StructType = PgnDataSource.schema
+  override def schema(): StructType = Pgn.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.BATCH_READ)
@@ -55,68 +53,79 @@ private[pgn] class PgnTable(path: String) extends Table
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
-      override def truncate(): WriteBuilder = this
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new PgnBatchWrite(path, info.schema())
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = {
+        if (!overwrite) throw new UnsupportedOperationException(
+          s"format(\"pgn\") writes only with mode(\"overwrite\"), not append: $path")
+        new Write {
+          override def toBatch: BatchWrite =
+            new PgnBatchWrite(path, info.queryId(), info.schema())
+        }
       }
     }
 }
 
-private[pgn] class PgnBatchWrite(path: String, schema: StructType)
+private[pgn] class PgnBatchWrite(path: String, writeId: String, schema: StructType)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PgnWriterFactory(path, schema.fieldNames)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+    new PgnWriterFactory(path, writeId, Pgn.schema.fieldNames.map(schema.fieldIndex))
+
+  /** Overwrite: the directory's other entries go only after every task of
+    * this write has committed, so a failed write leaves them readable. */
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val parts = committed(messages).map(_.getFileName.toString).toSet
+    val s = Files.list(Files.createDirectories(Paths.get(path)))
+    try s.forEach { p =>
+      if (!parts(p.getFileName.toString))
+        org.apache.commons.io.FileUtils.forceDelete(p.toFile)
+    } finally s.close()
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    committed(messages).foreach(Files.deleteIfExists)
+
+  private def committed(messages: Array[WriterCommitMessage]): Seq[Path] =
+    messages.toSeq.collect { case PgnCommit(f) if f.nonEmpty => Paths.get(f) }
 }
 
 private[pgn] case class PgnCommit(file: String) extends WriterCommitMessage
 
-private[pgn] class PgnWriterFactory(path: String, fields: Array[String])
-    extends DataWriterFactory {
+private[pgn] class PgnWriterFactory(path: String, writeId: String,
+    ordinals: Array[Int]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PgnWriter(path, fields, partitionId, taskId)
+    new PgnWriter(path, f"part-$partitionId%05d-$writeId.pgn", ordinals, taskId)
 }
 
-private[pgn] class PgnWriter(dir: String, fields: Array[String],
-    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
+/** Writes one part file; `ordinals(i)` is the input ordinal of column i
+  * of [[Pgn.schema]]. */
+private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
+    taskId: Long) extends DataWriter[InternalRow] {
 
-  private val idx: Map[String, Int] = fields.zipWithIndex.toMap
-  private val tmp = java.nio.file.Paths.get(dir,
-    f".part-$partitionId%05d-$taskId.pgn.tmp")
-  private val dst = java.nio.file.Paths.get(dir, f"part-$partitionId%05d.pgn")
-  java.nio.file.Files.createDirectories(tmp.getParent)
-  private val out = java.nio.file.Files.newBufferedWriter(tmp)
+  private val tmp = Paths.get(dir, s".$name-$taskId.tmp")
+  private val dst = Paths.get(dir, name)
+  Files.createDirectories(tmp.getParent)
+  private val out = Files.newBufferedWriter(tmp)
   private var n = 0L
-
-  private def field(row: InternalRow, name: String): String = {
-    val i = idx(name)
-    if (row.isNullAt(i)) "?" else row.getUTF8String(i).toString
-  }
 
   override def write(row: InternalRow): Unit = {
     n += 1
-    if (n > 1) out.write("\n")
-    out.write(s"[Game $n]\n")
-    out.write(s"""[Game ID "${field(row, "game_id")}"]\n""")
-    out.write(s"""[White "${field(row, "white_name")}"]\n""")
-    out.write(s"""[Black "${field(row, "black_name")}"]\n""")
-    out.write(s"""[Opening Eco "${field(row, "opening_eco")}"]\n""")
-    out.write(s"""[Opening Name "${field(row, "opening_name")}"]\n""")
-    out.write(s"""[Game Winner "${field(row, "winner")}"]\n""")
-    out.write(s"\n${field(row, "moves")}\n")
+    Pgn.appendBlock(out, n, { i =>
+      val o = ordinals(i)
+      if (row.isNullAt(o)) null else row.getUTF8String(o).toString
+    })
+    out.write('\n')
   }
 
   override def commit(): WriterCommitMessage = {
     out.close()
-    if (n == 0) { java.nio.file.Files.deleteIfExists(tmp); PgnCommit("") }
+    if (n == 0) { Files.deleteIfExists(tmp); PgnCommit("") }
     else {
-      java.nio.file.Files.move(tmp, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
       PgnCommit(dst.toString)
     }
   }
 
-  override def abort(): Unit = { out.close(); java.nio.file.Files.deleteIfExists(tmp) }
+  override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
   override def close(): Unit = ()
 }

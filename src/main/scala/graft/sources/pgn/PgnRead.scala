@@ -1,12 +1,14 @@
 package graft.sources.pgn
 
+import graft.sources.Pgn
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Read side of `format("pgn")` — parses the blocks the write side (and
+/** Read side of `format("pgn")` — parses the blocks every [[Pgn]] writer (and
   * the reference's `write_to_pgn`, `/root/reference/etl/transform.py:
   * 36-54`) emits back into rows, making PGN a full round-trip source.
   *
@@ -25,17 +27,23 @@ object PgnParse {
 
   private val TagRe = """\[([A-Za-z ]+) "(.*)"\]""".r
 
-  /** Parse one file's text into field maps (tag name → value). */
+  /** Column of each tag of [[Pgn.tags]]. */
+  private val columnOf: Map[String, String] = Pgn.tags.map(_.swap).toMap
+
+  /** Parse one file's text into field maps (column → value). */
   def parseBlocks(text: String): Seq[Map[String, String]] =
     text.split("(?m)(?=^\\[Game \\d+\\]$)").toIndexedSeq
       .filter(_.trim.nonEmpty)
       .map { block =>
         val lines = block.linesIterator.toVector
-        val tags = lines.collect { case TagRe(k, v) => k -> v }.toMap
+        val fields = lines.flatMap {
+          case TagRe(k, v) => columnOf.get(k).map(_ -> v)
+          case _ => None
+        }.toMap
         val blank = lines.indexWhere(_.trim.isEmpty)
         val moves =
           if (blank >= 0) lines.drop(blank + 1).mkString("\n").trim else ""
-        tags + ("Moves" -> moves)
+        fields + (Pgn.schema.last.name -> moves)
       }
 
   private val GameBytes = "[Game ".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
@@ -60,18 +68,11 @@ object PgnParse {
     digits > 0 && k < b.length && b(k) == ']' &&
       (k + 1 == b.length || b(k + 1) == '\n' || b(k + 1) == '\r')
   }
-
-  /** Writer tag name for each schema column. */
-  val tagOf: Map[String, String] = Map(
-    "game_id" -> "Game ID", "white_name" -> "White",
-    "black_name" -> "Black", "opening_eco" -> "Opening Eco",
-    "opening_name" -> "Opening Name", "winner" -> "Game Winner",
-    "moves" -> "Moves")
 }
 
 private[pgn] class PgnScanBuilder(path: String, splitSize: Long) extends ScanBuilder
     with SupportsPushDownRequiredColumns {
-  private var required: StructType = PgnDataSource.schema
+  private var required: StructType = Pgn.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan = new Scan {
@@ -87,23 +88,17 @@ private[pgn] case class PgnInputPartition(file: String, start: Long, end: Long)
 
 private[pgn] class PgnBatch(dir: String, required: StructType, splitSize: Long)
     extends Batch {
-  override def planInputPartitions(): Array[InputPartition] = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(dir)
-    val files: Seq[String] =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".pgn")).toVector.sorted
-        finally s.close()
-      } else Seq(dir)
-    files.flatMap { f =>
-      val size = java.nio.file.Files.size(java.nio.file.Paths.get(f))
-      if (size <= splitSize) Seq(PgnInputPartition(f, 0L, size))
+  /** The files Spark's own file index lists for `dir` — the committed
+    * output of any writer: hidden and `_` files are skipped, and a
+    * streaming sink's `_spark_metadata` log is followed. */
+  override def planInputPartitions(): Array[InputPartition] =
+    SparkSession.active.read.text(dir).inputFiles.sorted.flatMap { f =>
+      val file = new org.apache.hadoop.fs.Path(f).toUri.getPath
+      val size = java.nio.file.Files.size(java.nio.file.Paths.get(file))
+      if (size <= splitSize) Seq(PgnInputPartition(file, 0L, size))
       else (0L until size by splitSize)
-        .map(off => PgnInputPartition(f, off, math.min(off + splitSize, size)))
-    }.toArray
-  }
+        .map(off => PgnInputPartition(file, off, math.min(off + splitSize, size)))
+    }
   override def createReaderFactory(): PartitionReaderFactory =
     new PgnReaderFactory(required)
 }
@@ -125,11 +120,11 @@ private[pgn] class PgnReader(file: String, start: Long, end: Long,
   override def next(): Boolean =
     if (!blocks.hasNext) false
     else {
-      val tags = blocks.next()
+      val block = blocks.next()
       val row = new GenericInternalRow(fields.length)
       var i = 0
       while (i < fields.length) {
-        val v = tags.getOrElse(PgnParse.tagOf(fields(i)), "?")
+        val v = block.getOrElse(fields(i), "?")
         row.update(i, if (v == "?" || v == "None") null else UTF8String.fromString(v))
         i += 1
       }

@@ -28,6 +28,9 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("PGN rendering matches the golden file (S7/R10)") {
+    // Pgn.render reads a PuzzleGame's fields in the pgn schema's order
+    assert(org.apache.spark.sql.Encoders.product[graft.sources.PuzzleGame]
+      .schema.fieldNames.toSeq === Pgn.schema.fieldNames.toSeq)
     val got = Pgn.renderToString(games)
     val want = scala.io.Source.fromResource("graft/golden.pgn").mkString
     assert(got === want)
@@ -51,22 +54,35 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("PGN sink writes once per partition via committer, content preserved") {
+    import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("pgn_sink").toString
     Pgn.write(games, out)
     val back = spark.read.text(out)
     assert(back.filter("value like '[Game ID%'").count() === 5)
+    // the pgn reader sees every game of the text sink's part files
+    val read = spark.read.format("pgn").load(out)
+      .as[graft.sources.PuzzleGame].collect().sortBy(_.game_id)
+    assert(read.toSeq === games.collect().sortBy(_.game_id).toSeq)
   }
 
   test("DSV2 format(\"pgn\") writes committed per-partition pgn files") {
     val out = java.nio.file.Files.createTempDirectory("pgn_dsv2").toString
-    games.toDF().coalesce(1).write.mode("overwrite")
-      .format("graft.sources.pgn.PgnDataSource").save(out)
+    def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
+      df.write.mode(mode).format("graft.sources.pgn.PgnDataSource").save(out)
+    // overwrite leaves only the new write's parts
+    write(games.toDF().repartition(3), "overwrite")
+    write(games.toDF().coalesce(1), "overwrite")
     val files = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".pgn"))
     assert(files.length === 1)
     val content = new String(java.nio.file.Files.readAllBytes(files.head.toPath))
     assert(content.split("\\[Game ID").length - 1 === 5)
     assert(!content.contains(".tmp"))
+    // one file in game_id order: the golden layout
+    assert(content === scala.io.Source.fromResource("graft/golden.pgn").mkString)
+    val e = intercept[UnsupportedOperationException](write(games.toDF(), "append"))
+    assert(e.getMessage.contains("only with mode(\"overwrite\")"), e.getMessage)
+    assert(spark.read.format("pgn").load(out).count() === 5)
   }
 
   test("observed metrics ride the sink job — no extra count scans (R6)") {

@@ -17,16 +17,28 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
       s"""{"id":"$id","variant":"standard","status":"mate","winner":"white","moves":"e4 e5","players":{"white":{"user":{"name":"w"}},"black":{"user":{"name":"b"}}},"opening":{"eco":"C20","name":"KP"}}"""
     def countGames(): Long =
       spark.read.text(out).filter("value like '[Game ID%'").count()
+    // the puzzle generator's read: committed files only, every game
+    def readGames(): Long = spark.read.format("pgn").load(out).count()
 
     java.nio.file.Files.write(raw.resolve("f1.ndjson"),
       (game("a1") + "\n" + game("a2")).getBytes)
     ChessPipeline.runStream(spark, raw.toString, out, ckpt)
     assert(countGames() === 2)
+    assert(readGames() === 2)
+    // games are separated by one empty line, as in the golden file
+    val text = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath))).mkString
+    assert(text.contains("e4 e5\n\n[Game 2]\n"), text)
+
+    // a part file the sink never committed (a crashed attempt's leftover)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "part-00099-stale.txt"),
+      "[Game 1]\n[Game ID \"stale\"]\n\ne4\n")
 
     // second run with one new file: only the new games are appended
     java.nio.file.Files.write(raw.resolve("f2.ndjson"), game("b1").getBytes)
     ChessPipeline.runStream(spark, raw.toString, out, ckpt)
     assert(countGames() === 3) // 3, not 5 — f1 not reprocessed
+    assert(readGames() === 3) // the stale part is not output
   }
 
   test("EtlConfig parses the reference's yaml shape (R12)") {
