@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The reference's own query, Spark-first (SURVEY.md §7.3 minimum slice):
   * NDJSON scan (fixed schema) → conjunctive filter → nested projection →
-  * typed Dataset → PGN text sink. One job, one codegen span — versus the
-  * reference's 4 jobs + inference scan per file (SURVEY §3.2-3.3).
+  * typed Dataset → PGN files. One codegen span from scan to shuffle —
+  * versus the reference's 4 jobs + inference scan per file (SURVEY
+  * §3.2-3.3).
   */
 object ChessPipeline {
 
@@ -55,7 +56,10 @@ object ChessPipeline {
   def puzzleGames(spark: SparkSession, path: String): Dataset[PuzzleGame] =
     toPuzzleGames(readGames(spark, path))
 
-  /** R10: end-to-end batch run, NDJSON in → .pgn text out. */
+  /** R10: end-to-end batch run, NDJSON in → [[Pgn.write]]'s sized range
+    * sort and numbered `pgn` write: `part-NNNNN-<id>.pgn` files (no
+    * `_SUCCESS`) numbered `[Game 1]…[Game N]` across the parts in name order.
+    */
   def run(spark: SparkSession, inputPath: String, outDir: String): Unit =
     Pgn.write(puzzleGames(spark, inputPath), outDir)
 
@@ -65,7 +69,6 @@ object ChessPipeline {
     */
   def runWithMetrics(spark: SparkSession, inputPath: String,
       outDir: String): Map[String, Any] = {
-    import org.apache.spark.sql.functions._
     val obs = new org.apache.spark.sql.Observation("chess_metrics")
     puzzleGames(spark, inputPath).toDF()
       .observe(obs,

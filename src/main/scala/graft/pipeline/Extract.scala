@@ -21,9 +21,12 @@ class Extract(stateDir: Path) {
 
   private val wmFile = stateDir.resolve("last_timestamp.txt")
 
-  def loadWatermark(): Option[Long] =
-    if (Files.exists(wmFile)) Some(new String(Files.readAllBytes(wmFile)).trim.toLong)
-    else None
+  /** The committed watermark; a file that does not hold one number (torn
+    * or garbled) fails with [[Extract.BadWatermark]], naming file and content. */
+  def loadWatermark(): Option[Long] = Option.when(Files.exists(wmFile)) {
+    val text = new String(Files.readAllBytes(wmFile))
+    text.trim.toLongOption.getOrElse(throw new Extract.BadWatermark(wmFile, text))
+  }
 
   private def saveWatermark(ts: Long): Unit = {
     Files.createDirectories(stateDir)
@@ -53,4 +56,7 @@ class Extract(stateDir: Path) {
 
 object Extract {
   def apply(stateDir: String): Extract = new Extract(Paths.get(stateDir))
+
+  final class BadWatermark(file: Path, content: String) extends IllegalStateException(
+    s"watermark file $file holds no timestamp: \"$content\"")
 }

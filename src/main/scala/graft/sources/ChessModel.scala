@@ -2,40 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.types._
 
-/** Typed model of the Lichess games-export payload — the reference's raw
-  * zone (SURVEY.md §1.3; reference reads it schema-inferred at
-  * /root/reference/etl/transform.py:94, fields per
-  * /root/reference/etl/extract.py:57-66's request params).
-  */
-case class ChessUser(name: Option[String], id: Option[String])
-case class ChessPlayer(user: Option[ChessUser], rating: Option[Long],
-    ratingDiff: Option[Long])
-case class ChessPlayers(white: Option[ChessPlayer], black: Option[ChessPlayer])
-case class ChessOpening(eco: Option[String], name: Option[String], ply: Option[Long])
-case class ChessClock(initial: Option[Long], increment: Option[Long],
-    totalTime: Option[Long])
-case class ChessJudgment(name: Option[String], comment: Option[String])
-case class ChessAnalysis(eval: Option[Long], mate: Option[Long],
-    best: Option[String], variation: Option[String],
-    judgment: Option[ChessJudgment])
-
-case class Game(
-    id: String,
-    rated: Option[Boolean],
-    variant: Option[String],
-    speed: Option[String],
-    perf: Option[String],
-    createdAt: Option[Long],
-    lastMoveAt: Option[Long],
-    status: Option[String],
-    winner: Option[String],
-    moves: Option[String],
-    players: Option[ChessPlayers],
-    opening: Option[ChessOpening],
-    clock: Option[ChessClock],
-    clocks: Option[Seq[Long]],
-    analysis: Option[Seq[ChessAnalysis]])
-
 /** The reference's 7-field output projection
   * (/root/reference/etl/transform.py:66-74).
   */
@@ -55,8 +21,11 @@ object ChessModel {
     StructField("user", user), StructField("rating", LongType),
     StructField("ratingDiff", LongType)))
 
-  /** Fixed StructType replacing the reference's per-file inference — at
-    * scale, inference is an extra full scan per batch (SURVEY §4.2).
+  /** The Lichess games-export payload — the reference's raw zone
+    * (SURVEY.md §1.3; fields per the request params of its
+    * `etl/extract.py:57-66`). A fixed StructType replacing the reference's
+    * per-file inference (its `etl/transform.py:94`) — at scale, inference
+    * is an extra full scan per batch (SURVEY §4.2).
     */
   val gameSchema: StructType = StructType(Seq(
     StructField("id", StringType),

@@ -8,14 +8,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Sources and sinks (SURVEY.md §2B S1–S8). Round-trip queries write to
-  * fixed /tmp locations with mode=overwrite (idempotent under re-run)
-  * and re-read through the normal scan path, so the sink, the committer,
-  * and the reader are all on the verified path.
+  * fixed names under one per-JVM temp directory with mode=overwrite
+  * (idempotent under re-run) and re-read through the normal scan path, so
+  * the sink, the committer, and the reader are all on the verified path.
   */
 object Ingest {
 
-  private def tmp(name: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name).toString
+  /** Created on first use, deleted at JVM exit: concurrent JVMs never
+    * read each other's outputs. */
+  private lazy val tmpRoot: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  private def tmp(name: String): String = tmpRoot.resolve(name).toString
 
   /** s11 bucket-count law (VERDICT r8 #8): like `hexShardChars`, the
     * count comes from table statistics instead of a fixture-shaped
@@ -251,8 +258,8 @@ object Ingest {
           countDistinct(when(ok, col("lang"))).as("n_langs"))
     }),
 
-    // S7: PGN text sink on the sample (golden-file spec owns the exact
-    // bytes; here the written dir is re-read and game blocks counted).
+    // S7: the paper's batch run on the sample (golden-file spec owns the
+    // exact bytes; here the written dir is re-read and game blocks counted).
     "s7_pgn_sink" -> ((s, _) => {
       val out = tmp("graft_s7_pgn")
       ChessPipeline.run(s, ChessPipeline.samplePath, out)

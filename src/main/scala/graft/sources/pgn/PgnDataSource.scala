@@ -3,10 +3,13 @@ package graft.sources.pgn
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 import graft.sources.Pgn
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -17,12 +20,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Each task writes one standalone .pgn file through a temp-file +
   * commit-rename protocol (idempotent under task retry — the committer
   * discipline the reference's shared-append sink lacked, SURVEY §2A
-  * R10). Game numbering restarts per file, matching the reference's
-  * per-output-file `[Game N]` semantics without its cross-partition
-  * interleaving race; `graft.sources.Pgn.renderAll` remains the path for
-  * globally-numbered single collections. Only `overwrite` is supported:
-  * once every task has committed, the job commit deletes everything
-  * else in the directory.
+  * R10). Through `format("pgn")`, game numbering restarts per file,
+  * matching the reference's per-output-file `[Game N]` semantics without
+  * its cross-partition interleaving race. `graft.sources.Pgn.write`
+  * (`ChessPipeline.run`) drives the same writer and commit with each
+  * part's start offset, so its parts carry one global numbering. Only
+  * `overwrite` is supported: once every task has committed, the job
+  * commit deletes everything else in the directory.
   */
 class PgnDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgn"
@@ -59,17 +63,35 @@ private[pgn] class PgnTable(path: String) extends Table
         if (!overwrite) throw new UnsupportedOperationException(
           s"format(\"pgn\") writes only with mode(\"overwrite\"), not append: $path")
         new Write {
-          override def toBatch: BatchWrite =
-            new PgnBatchWrite(path, info.queryId(), info.schema())
+          override def toBatch: BatchWrite = new PgnBatchWrite(path, info.queryId(),
+            Pgn.schema.fieldNames.map(info.schema().fieldIndex))
         }
       }
     }
 }
 
-private[pgn] class PgnBatchWrite(path: String, writeId: String, schema: StructType)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PgnWriterFactory(path, writeId, Pgn.schema.fieldNames.map(schema.fieldIndex))
+/** One overwrite of `path`, and the factory of its part writers:
+  * `ordinals(i)` is the input ordinal of column i of [[Pgn.schema]], and
+  * partition p's games are numbered from `start(p) + 1`. */
+private[sources] class PgnBatchWrite(path: String, writeId: String, ordinals: Array[Int],
+    start: Int => Long = _ => 0L) extends BatchWrite with DataWriterFactory {
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = this
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new PgnWriter(path, f"part-$partitionId%05d-$writeId.pgn", ordinals, taskId,
+      start(partitionId))
+
+  /** Writes partition p of `rows` as part p in one job, through Spark's
+    * DSv2 task protocol, then commits; if the job fails, aborts the parts
+    * already committed. */
+  def write(rows: RDD[InternalRow]): Unit = {
+    val messages = new Array[WriterCommitMessage](rows.getNumPartitions)
+    try rows.sparkContext.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+      DataWritingSparkTask.run(this, ctx, it, useCommitCoordinator(), Map.empty).writerCommitMessage,
+      (p: Int, m: WriterCommitMessage) => messages(p) = m)
+    catch { case t: Throwable => abort(messages); throw t }
+    commit(messages)
+  }
 
   /** Overwrite: the directory's other entries go only after every task of
     * this write has committed, so a failed write leaves them readable. */
@@ -91,35 +113,26 @@ private[pgn] class PgnBatchWrite(path: String, writeId: String, schema: StructTy
 
 private[pgn] case class PgnCommit(file: String) extends WriterCommitMessage
 
-private[pgn] class PgnWriterFactory(path: String, writeId: String,
-    ordinals: Array[Int]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PgnWriter(path, f"part-$partitionId%05d-$writeId.pgn", ordinals, taskId)
-}
-
-/** Writes one part file; `ordinals(i)` is the input ordinal of column i
-  * of [[Pgn.schema]]. */
+/** Writes one part file, its games numbered from `start + 1`;
+  * `ordinals(i)` is the input ordinal of column i of [[Pgn.schema]]. */
 private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
-    taskId: Long) extends DataWriter[InternalRow] {
+    taskId: Long, start: Long) extends DataWriter[InternalRow] {
 
   private val tmp = Paths.get(dir, s".$name-$taskId.tmp")
   private val dst = Paths.get(dir, name)
   Files.createDirectories(tmp.getParent)
   private val out = Files.newBufferedWriter(tmp)
-  private var n = 0L
+  private var n = start
 
   override def write(row: InternalRow): Unit = {
     n += 1
-    Pgn.appendBlock(out, n, { i =>
-      val o = ordinals(i)
-      if (row.isNullAt(o)) null else row.getUTF8String(o).toString
-    })
+    Pgn.appendBlock(out, n, Pgn.field(row, ordinals))
     out.write('\n')
   }
 
   override def commit(): WriterCommitMessage = {
     out.close()
-    if (n == 0) { Files.deleteIfExists(tmp); PgnCommit("") }
+    if (n == start) { Files.deleteIfExists(tmp); PgnCommit("") }
     else {
       Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
       PgnCommit(dst.toString)

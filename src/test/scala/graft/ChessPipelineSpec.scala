@@ -85,6 +85,56 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.format("pgn").load(out).count() === 5)
   }
 
+  private def tempDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix)
+
+  /** `part-*` files of `dir`, in name order. */
+  private def parts(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    Option(dir.toFile.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).map(_.toPath).sortBy(_.getFileName.toString)
+
+  test("run numbers games globally across parts, in game_id order") {
+    val sample = scala.io.Source.fromResource("graft/lichess_sample.ndjson").getLines().toVector
+    val raw = tempDir("pgn_multi_raw")
+    // 3 files of 200 games (100 puzzle games each); every file's ids
+    // spread over the whole id range, so each range partition draws on
+    // every scan partition
+    for (f <- 0 until 3) {
+      val lines = for (k <- 0 until 20; line <- sample) yield {
+        val copy = f * 20 + k
+        line.replaceFirst("^\\{\"id\":\"(game\\d+)\"",
+          f"{\"id\":\"${copy * 7 % 60}%02d-$$1\"")
+      }
+      java.nio.file.Files.write(raw.resolve(s"games_$f.ndjson"), lines.mkString("", "\n", "\n").getBytes)
+    }
+    val out = tempDir("pgn_multi_out")
+    ChessPipeline.run(spark, raw.toString, out.toString)
+    val files = parts(out)
+    assert(files.size > 1, files)
+    assert(files.forall(_.getFileName.toString.endsWith(".pgn")), files)
+    val text = files.map(f => new String(java.nio.file.Files.readAllBytes(f))).mkString
+    val numbers = "(?m)^\\[Game (\\d+)\\]$".r.findAllMatchIn(text).map(_.group(1).toInt).toSeq
+    assert(numbers === (1 to 300))
+    val ids = "(?m)^\\[Game ID \"([^\"]*)\"\\]$".r.findAllMatchIn(text).map(_.group(1)).toSeq
+    assert(ids.size === 300 && ids === ids.sorted)
+    assert(text === Pgn.renderToString(ChessPipeline.puzzleGames(spark, raw.toString)))
+  }
+
+  test("run on input without puzzle games leaves an empty, readable output") {
+    val out = tempDir("pgn_empty_out")
+    val noPuzzles = tempDir("pgn_no_puzzles")
+    java.nio.file.Files.write(noPuzzles.resolve("games.ndjson"),
+      scala.io.Source.fromResource("graft/lichess_sample.ndjson").getLines()
+        .filterNot(_.contains("\"status\":\"mate\"")).mkString("", "\n", "\n").getBytes)
+    // an empty raw directory plans no scan partition at all
+    for (raw <- Seq(noPuzzles, tempDir("pgn_empty_raw"))) {
+      ChessPipeline.run(spark, ChessPipeline.samplePath, out.toString)
+      assert(parts(out).nonEmpty)
+      ChessPipeline.run(spark, raw.toString, out.toString)
+      assert(out.toFile.list().toSeq === Nil)
+      assert(spark.read.format("pgn").load(out.toString).count() === 0)
+    }
+  }
+
   test("observed metrics ride the sink job — no extra count scans (R6)") {
     val out = java.nio.file.Files.createTempDirectory("pgn_obs").toString
     val metrics = ChessPipeline.runWithMetrics(spark, ChessPipeline.samplePath, out)

@@ -34,6 +34,21 @@ class ExtractSpec extends AnyFunSuite {
     assert(ex.loadWatermark() === Some(100L)) // not advanced past failure
   }
 
+  test("a torn watermark fails with a named error giving file and content") {
+    val state = tempDir
+    val ex = new Extract(state)
+    ex.run((_, _) => Iterator.single("""{"id":"a"}"""), state.resolve("raw"), 100L)
+    val wm = state.resolve("last_timestamp.txt")
+    for (content <- Seq("", "17000#3")) {
+      java.nio.file.Files.write(wm, content.getBytes)
+      val e = intercept[Extract.BadWatermark](ex.loadWatermark())
+      assert(e.getMessage.contains(s"""$wm holds no timestamp: "$content""""), e.getMessage)
+    }
+    intercept[Extract.BadWatermark] {
+      ex.run((_, _) => fail("must not fetch past a bad watermark"), state.resolve("raw"), 200L)
+    }
+  }
+
   /** Loopback stub of the games-export endpoint: records the request,
     * serves canned NDJSON. No external network anywhere.
     */
