@@ -93,6 +93,18 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
 
+  /** One per-JVM scratch root, created on first use and deleted at JVM
+    * exit, so concurrent JVMs never read, overwrite or delete each
+    * other's entry outputs, feeds or checkpoints. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_scratch")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  /** An entry's scratch path under the per-JVM root. */
+  def scratch(name: String): String = scratchRoot.resolve(name).toString
+
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")

@@ -9,7 +9,16 @@ import java.nio.file.{Files, Paths}
   */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
+    if (args.length < 3) {
+      System.err.println("usage: runMain graft.VerifyOne <sfDir> <outDir> <name...>")
+      sys.exit(2)
+    }
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = Tuning(SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")

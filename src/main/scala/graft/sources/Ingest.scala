@@ -8,21 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Sources and sinks (SURVEY.md §2B S1–S8). Round-trip queries write to
-  * fixed names under one per-JVM temp directory with mode=overwrite
+  * fixed names under the per-JVM `Tables.scratch` root with mode=overwrite
   * (idempotent under re-run) and re-read through the normal scan path, so
   * the sink, the committer, and the reader are all on the verified path.
   */
 object Ingest {
-
-  /** Created on first use, deleted at JVM exit: concurrent JVMs never
-    * read each other's outputs. */
-  private lazy val tmpRoot: java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-    dir
-  }
-
-  private def tmp(name: String): String = tmpRoot.resolve(name).toString
 
   /** s11 bucket-count law (VERDICT r8 #8): like `hexShardChars`, the
     * count comes from table statistics instead of a fixture-shaped
@@ -84,7 +74,7 @@ object Ingest {
 
     // S4: CSV round-trip with header + explicit schema.
     "s4_csv_roundtrip" -> ((s, d) => {
-      val out = tmp("graft_s4_nation_csv")
+      val out = Tables.scratch("graft_s4_nation_csv")
       Tables.nation(s, d).write.mode("overwrite")
         .option("header", "true").csv(out)
       val schema = StructType(Seq(
@@ -96,7 +86,7 @@ object Ingest {
 
     // S5: NDJSON sink round-trip (Spark writes NDJSON natively).
     "s5_ndjson_roundtrip" -> ((s, d) => {
-      val out = tmp("graft_s5_events_json")
+      val out = Tables.scratch("graft_s5_events_json")
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(out)
@@ -112,7 +102,7 @@ object Ingest {
     // S6: partitioned parquet sink — write orders by year, re-read with
     // partition pruning available, aggregate per partition value.
     "s6_partitioned_parquet" -> ((s, d) => {
-      val out = tmp("graft_s6_orders_by_year")
+      val out = Tables.scratch("graft_s6_orders_by_year")
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         // co-locate each year before the write: one file per partition
@@ -145,7 +135,7 @@ object Ingest {
       // fixed names let sessions over different fixtures clobber)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"s13_orders_by_year_$tag"
-      val out = tmp(s"graft_s13_orders_by_year_$tag")
+      val out = Tables.scratch(s"graft_s13_orders_by_year_$tag")
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .repartition(col("o_year"))
@@ -164,7 +154,7 @@ object Ingest {
     }),
 
     "s6b_partition_pruned_read" -> ((s, d) => {
-      val out = tmp("graft_s6b_orders_by_year")
+      val out = Tables.scratch("graft_s6b_orders_by_year")
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .repartition(col("o_year"))
@@ -207,10 +197,10 @@ object Ingest {
       }
       bucketed(Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority")),
-        "o_orderkey", s"s11_orders_b_$tag", tmp(s"graft_s11_orders_b_$tag"))
+        "o_orderkey", s"s11_orders_b_$tag", Tables.scratch(s"graft_s11_orders_b_$tag"))
       bucketed(Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_extendedprice")),
-        "l_orderkey", s"s11_lineitem_b_$tag", tmp(s"graft_s11_lineitem_b_$tag"))
+        "l_orderkey", s"s11_lineitem_b_$tag", Tables.scratch(s"graft_s11_lineitem_b_$tag"))
       s.table(s"s11_orders_b_$tag").hint("merge")
         .join(s.table(s"s11_lineitem_b_$tag"),
           col("o_orderkey") === col("l_orderkey"))
@@ -234,7 +224,7 @@ object Ingest {
     // no shuffle and scales with the scan.
     "s12_corrupt_ndjson" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = tmp(s"graft_s12_dirty_json_$tag")
+      val out = Tables.scratch(s"graft_s12_dirty_json_$tag")
       Tables.documents(s, d)
         .select(when(col("doc_id") % 7 === 0,
             concat(lit("{\"doc_id\": "), col("doc_id").cast(StringType),
@@ -261,7 +251,7 @@ object Ingest {
     // S7: the paper's batch run on the sample (golden-file spec owns the
     // exact bytes; here the written dir is re-read and game blocks counted).
     "s7_pgn_sink" -> ((s, _) => {
-      val out = tmp("graft_s7_pgn")
+      val out = Tables.scratch("graft_s7_pgn")
       ChessPipeline.run(s, ChessPipeline.samplePath, out)
       s.read.text(out)
         .agg(count(lit(1)).as("n_lines"),
@@ -273,7 +263,7 @@ object Ingest {
     // through the PGN reader (block parser, one partition per file,
     // column pruning pushed into the scan). "?" tags round-trip to NULL.
     "s7b_pgn_roundtrip" -> ((s, _) => {
-      val out = tmp("graft_s7b_pgn_dsv2")
+      val out = Tables.scratch("graft_s7b_pgn_dsv2")
       ChessPipeline.puzzleGames(s, ChessPipeline.samplePath).toDF()
         .write.format("pgn").mode("overwrite").save(out)
       s.read.format("pgn").load(out)
@@ -287,7 +277,7 @@ object Ingest {
     // must equal the same aggregate computed from the parquet source
     // (DuckDB has no ORC reader, so fidelity is checked through values).
     "s9_orc_roundtrip" -> ((s, d) => {
-      val out = tmp("graft_s9_lineitem_orc")
+      val out = Tables.scratch("graft_s9_lineitem_orc")
       // fanOut BEFORE the write: a one-split source serializes the ORC
       // encode onto 1-2 tasks AND leaves 1-2 files for the re-read to
       // parse serially — writing from N tasks parallelizes both halves
@@ -307,7 +297,7 @@ object Ingest {
     // from the old batch surface the new column as NULL. The append-only
     // reality of long-lived datasets: schemas grow, readers must cope.
     "s10_schema_merge" -> ((s, d) => {
-      val out = tmp("graft_s10_evolving")
+      val out = Tables.scratch("graft_s10_evolving")
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderdate"))
       base.filter(col("o_orderkey") % 2 === 0)
@@ -342,7 +332,7 @@ object Ingest {
     // IngestSpec asserts the skip actually happened (matched < total).
     "s14_stats_skipping" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = tmp(s"graft_s14_lineitem_skip_$tag")
+      val out = Tables.scratch(s"graft_s14_lineitem_skip_$tag")
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_shipdate"))
@@ -373,7 +363,7 @@ object Ingest {
     // table, so the hash pins the NULL-fill semantics exactly.
     "s15_schema_evolution" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = tmp(s"graft_s15_evolved_$tag")
+      val out = Tables.scratch(s"graft_s15_evolved_$tag")
       val orders = Tables.orders(s, d)
         .withColumn("cents",
           expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)"))

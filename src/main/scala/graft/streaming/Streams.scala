@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming operators (SURVEY.md §2B T1–T7).
@@ -18,10 +19,12 @@ import org.apache.spark.sql.types.StructType
 object Streams {
 
   /** Scratch-directory tag for a dataset dir: the sanitized-path
-    * suffix (human-readable in /tmp listings) PLUS an 8-hex SHA-1 of
+    * suffix (human-readable in scratch listings) PLUS an 8-hex SHA-1 of
     * the FULL path (ADVICE r15 — two dataset roots sharing a 24-char
     * sanitized tail would otherwise map to the same feed dir and
-    * interleave staged batches across concurrent runs).
+    * interleave staged batches). The directories it names live under
+    * the per-JVM [[graft.Tables.scratch]] root, so two JVMs on the same
+    * dataset never share them.
     */
   private def dirTag(d: String): String = {
     val sha = java.security.MessageDigest.getInstance("SHA-1")
@@ -67,11 +70,6 @@ object Streams {
     java.nio.file.Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(1700000000000L + b * 60000L))
     ()
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmTree))
-    f.delete(): Unit
   }
 
   /** One event for the typed/stateful paths. */
@@ -463,6 +461,135 @@ object Streams {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
   }
 
+  /** The rig of the oracle-graded streaming entries t22–t39, written
+    * once. [[scenario]] is the only place that
+    *  - owns the entry's scratch directory — [[graft.Tables.scratch]] (one
+    *    root per JVM) named by [[dirTag]] (one directory per dataset) —
+    *    and empties it before use. The catalog table an entry may keep
+    *    there ([[Scenario.table]]) is dropped BEFORE the directory goes:
+    *    the reverse order makes the catalog's drop-time listing log a
+    *    spurious FileNotFound;
+    *  - stages feeds as mtime-pinned single-file batches ([[stageLines]])
+    *    and opens each as a file stream of one file per trigger;
+    *  - starts, drains and stops every query, and for exactly that span
+    *    sets the entry's `spark.sql.shuffle.partitions` (and, for the
+    *    `rocksDb` entries, the RocksDB state-store provider, which
+    *    transformWithState requires), restoring both in `finally`. The
+    *    fixture's batch work around the query keeps the session's count.
+    *
+    * Staging: one NARROW `to_json(...).collect()` per entry feeds every
+    * staged batch and every driver-side decision, with no Spark job per
+    * staged file (see [[stageLines]]). Batch MEMBERSHIP is the graded
+    * property and stays the exact row multiset the entry filters; row
+    * order within a staged file never reaches an entry's output — each
+    * entry's comment says why.
+    *
+    * State partitions: the state-store partition count is fixed by
+    * shuffle.partitions at the stream's FIRST checkpoint. The fixture's
+    * groups need 8 state partitions, not 32: at 32 each trigger pays 32
+    * state-store commits of mostly-empty state (measured ~2× the whole
+    * t22 entry). A stream-stream join runs FOUR state stores per
+    * partition per side, so t23/t32 take 4 (at 32 each trigger paid 256
+    * mostly-empty commits). Session conf, restored when the query stops
+    * (the stream clones the session at `start()`); queries run
+    * sequentially under both Verify and Bench.
+    */
+  private[graft] def scenario(name: String, parts: Int, rocksDb: Boolean = false)(
+      body: (SparkSession, String, Scenario) => DataFrame): (String, graft.Tables.Q) =
+    name -> ((s, d) => {
+      val sc = new Scenario(s, name.takeWhile(_ != '_'), dirTag(d), parts, rocksDb)
+      s.sql(s"DROP TABLE IF EXISTS ${sc.table}")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sc.dir))
+      body(s, d, sc)
+    })
+
+  /** One run of a [[scenario]]: its scratch paths, feeds and sinks. */
+  private[graft] final class Scenario(s: SparkSession, tag: String, dtag: String,
+      parts: Int, rocksDb: Boolean) {
+    val dir: String = graft.Tables.scratch(s"${tag}_$dtag")
+    /** The entry's catalog table, if it keeps one, located under [[dir]]. */
+    val table: String = s"${tag}_$dtag"
+
+    def path(sub: String): String = s"$dir/$sub"
+
+    /** Stage batch `b` of feed `name`. */
+    def stage(name: String, b: Int, lines: Seq[String]): Unit =
+      stageLines(path(name), b, lines)
+
+    /** Collect `keyed` once — batch number first, JSON line last — stage
+      * batches 0 until `n` of feed `name`, and return the rows. */
+    def stageBatches(n: Int, keyed: DataFrame, name: String = "feed")
+        : Seq[org.apache.spark.sql.Row] = {
+      val rows = keyed.collect().toSeq
+      (0 until n).foreach(b => stage(name, b,
+        rows.filter(_.getLong(0) == b).map(r => r.getString(r.length - 1))))
+      rows
+    }
+
+    /** Feed `name` as a file stream of one staged file per trigger. */
+    def feed(ddl: String, name: String = "feed"): DataFrame =
+      s.readStream.schema(ddl).option("maxFilesPerTrigger", "1").json(path(name))
+
+    /** Start `w`, drain it and stop it. `availableNow` runs the trigger a
+      * cron-scheduled backfill uses: the query terminates by itself once
+      * everything available is processed. */
+    def drain(w: DataStreamWriter[_], availableNow: Boolean = false): Unit = {
+      val confs = Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
+        (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        else Nil)
+      val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      try {
+        val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+        try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
+        finally q.stop()
+      } finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
+
+    /** Drain `df` into the memory table `<tag>_final` and read it back. */
+    def memory(df: DataFrame, mode: String): DataFrame = {
+      drain(df.writeStream.format("memory").queryName(s"${tag}_final")
+        .outputMode(mode))
+      s.table(s"${tag}_final")
+    }
+
+    /** The injected crash of t35/t39: the sink committed the last batch
+      * but the checkpoint's commit marker never landed, so a restart
+      * re-delivers that batch under the same id. The local checksum FS
+      * keeps a `.N.crc` sidecar; it must go with the marker or the
+      * replayed commit write trips over it. */
+    def dropLastCommit(ckpt: String): Unit = {
+      val commits = new java.io.File(path(s"$ckpt/commits"))
+      val markers = Option(commits.listFiles).toSeq.flatten
+        .filter(_.getName.forall(_.isDigit))
+      require(markers.nonEmpty, s"$tag: no commit markers in the checkpoint")
+      val last = markers.maxBy(_.getName.toInt)
+      new java.io.File(commits, s".${last.getName}.crc").delete()
+      require(last.delete(), s"$tag: could not drop the last commit marker")
+    }
+  }
+
+  /** t33–t35's feed: every event in three id%3 batches as a typed [[Ev]]
+    * stream whose values are exact whole-double cents — the per-key state
+    * folds (cents sums, counts, the latest-wins merge's (ts, event_id)
+    * total order) are order-independent within a batch. */
+  private def centsEvents(s: SparkSession, d: String, sc: Scenario): Dataset[Ev] = {
+    import s.implicits._
+    sc.stageBatches(3, graft.Tables.events(s, d)
+      .select((col("event_id") % 3).as("b"),
+        to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
+          col("user_id"), col("event_type"),
+          expr("CAST(CAST(ROUND(value * 1e2, 0) AS BIGINT) AS DOUBLE)")
+            .as("value")))))
+    sc.feed("event_id BIGINT, us BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
+      .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+        col("user_id"), col("event_type"), col("value")).as[Ev]
+  }
+
   /** T22 (r13): STREAM/BATCH PARITY under the external oracle — the one
     * streaming scenario graded by DuckDB instead of the engine's own
     * asserts (STREAM_r{N} scenarios t1–t21 check literal expected values,
@@ -480,51 +607,23 @@ object Streams {
     * a dropped row is exactly what would break THIS parity.
     */
   val queries: Map[String, graft.Tables.Q] = Map(
-    "t22_stream_batch_parity" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t22_feed_${dirTag(d)}").toString
-      // one NARROW collect stages the three batches driver-side (see
-      // [[stageLines]]): a complete-mode aggregate with no watermark is
-      // the fold over ALL rows — the final table is independent of how
-      // rows split into batches (the oracle recomputes it from the raw
-      // events) — so a deterministic id%3 split replaces the round-
-      // robin repartition(3) write; still one file per trigger, ≥3
+    scenario("t22_stream_batch_parity", parts = 8) { (s, d, sc) =>
+      // a complete-mode aggregate with no watermark is the fold over ALL
+      // rows — the final table is independent of how rows split into
+      // batches (the oracle recomputes it from the raw events) — so a
+      // deterministic id%3 split serves; one file per trigger gives ≥3
       // triggers of cross-batch state accumulation
-      rmTree(new java.io.File(feed))
-      val rows = graft.Tables.events(s, d)
+      sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"),
           to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
-            col("event_type"))).as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("event_type", StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(feed)
-        .withColumn("ts", timestamp_micros(col("us")))
-      // the state-store partition count is fixed by shuffle.partitions at
-      // the stream's FIRST checkpoint; ~25 (window, type) groups need 8
-      // state partitions, not 32 — at 32 each of the ≥3 triggers pays 32
-      // state-store commits of mostly-empty state (measured ~2× the whole
-      // entry). Session conf, restored after the stream stops; queries
-      // run sequentially under both Verify and Bench.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = stream
+            col("event_type")))))
+      sc.memory(sc.feed("event_id BIGINT, us BIGINT, event_type STRING")
+          .withColumn("ts", timestamp_micros(col("us")))
           .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("t22_final")
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t22_final")
+          .agg(count(lit(1)).as("n")), "complete")
         .select(unix_micros(col("window.start")).as("win_us"),
           col("event_type"), col("n"))
-    }),
+    },
 
     // T23 (r13): STREAM-STREAM INTERVAL JOIN under the external oracle —
     // t22's parity contract applied to the hardest streaming operator
@@ -539,54 +638,31 @@ object Streams {
     // "late" rows and parity would measure the REPLAY ORDER, not the
     // operator — bounded-state eviction under realistic watermarks is
     // t8/t8b's StreamCheck scenario; THIS entry pins the join itself.
-    "t23_stream_interval_join" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val tag = dirTag(d)
-      val pDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t23_p_$tag").toString
-      val cDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t23_c_$tag").toString
+    scenario("t23_stream_interval_join", parts = 4) { (s, d, sc) =>
       // purchases arrive over TWO triggers (the cross-batch matching the
       // pin needs: batch-2 purchases must find batch-1 clicks in state);
       // clicks land in one — a second click file would only add state
-      // commits, not a new code path. One NARROW collect stages both
-      // sides driver-side (see [[stageLines]]): under the beyond-span
-      // watermark nothing is ever evicted, so the inner join emits every
+      // commits, not a new code path. Under the beyond-span watermark
+      // nothing is ever evicted, so the inner join emits every
       // qualifying pair exactly once REGARDLESS of batch membership (the
       // oracle recomputes the pair set from the raw events) — a
-      // deterministic id%2 split replaces the round-robin repartition(2)
-      rmTree(new java.io.File(pDir)); rmTree(new java.io.File(cDir))
+      // deterministic id%2 split serves
       val rows = graft.Tables.events(s, d)
         .select(col("event_type"), col("event_id"),
           to_json(struct(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("us"), col("event_type"))).as("js"))
-        .collect()
+            unix_micros(col("ts")).as("us"), col("event_type"))))
+        .collect().toSeq
       val purch = rows.filter(_.getString(0) == "purchase")
-      (0 to 1).foreach(b => stageLines(pDir, b,
-        purch.toSeq.filter(_.getLong(1) % 2 == b).map(_.getString(2))))
-      stageLines(cDir, 0,
-        rows.toSeq.filter(_.getString(0) == "click").map(_.getString(2)))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("us", LongType), StructField("event_type", StringType)))
-      def feed(dir: String): DataFrame = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(dir)
-        .withColumn("ts", timestamp_micros(col("us")))
-      // 4 state partitions: a stream-stream join runs FOUR state stores
-      // per partition per side — at 32 partitions each trigger paid 256
-      // mostly-empty store commits (the t22 sizing rule, squared)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = intervalJoin(feed(pDir), feed(cDir),
-            watermark = "3650 days", interval = "30 minutes")
-          .select(col("p_id"), col("c_id"), col("p_user").as("user_id"))
-          .writeStream.format("memory").queryName("t23_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t23_final").select(col("p_id"), col("c_id"), col("user_id"))
-    }),
+      (0 to 1).foreach(b => sc.stage("p", b,
+        purch.filter(_.getLong(1) % 2 == b).map(_.getString(2))))
+      sc.stage("c", 0, rows.filter(_.getString(0) == "click").map(_.getString(2)))
+      def feed(name: String): DataFrame =
+        sc.feed("event_id BIGINT, user_id BIGINT, us BIGINT, event_type STRING", name)
+          .withColumn("ts", timestamp_micros(col("us")))
+      sc.memory(intervalJoin(feed("p"), feed("c"),
+          watermark = "3650 days", interval = "30 minutes")
+        .select(col("p_id"), col("c_id"), col("p_user").as("user_id")), "append")
+    },
 
     // T24 (r14): STREAMING SESSION MERGE under the external oracle —
     // t19's cross-batch session-merge semantics graded by DuckDB instead
@@ -602,43 +678,22 @@ object Streams {
     // when the per-user time delta reaches the gap). The fixture has no
     // exact 30-minute deltas at any SF (checked), so the half-open
     // boundary convention cannot silently diverge.
-    "t24_stream_session_merge" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t24_feed_${dirTag(d)}").toString
-      // one NARROW collect stages the four batches driver-side (see
-      // [[stageLines]]): complete mode under a beyond-span watermark
-      // emits the final merged session set — independent of batch
-      // membership (the oracle recomputes sessions from the raw
-      // events) — so a deterministic id%4 split replaces the round-
-      // robin repartition(4); sessions still arrive scattered across
-      // the four triggers and must merge batch after batch
-      rmTree(new java.io.File(feed))
-      val rows = graft.Tables.events(s, d)
+    scenario("t24_stream_session_merge", parts = 8) { (s, d, sc) =>
+      // complete mode under a beyond-span watermark emits the final
+      // merged session set — independent of batch membership (the oracle
+      // recomputes sessions from the raw events) — so a deterministic
+      // id%4 split serves; sessions still arrive scattered across the four triggers and must merge
+      // batch after batch
+      sc.stageBatches(4, graft.Tables.events(s, d)
         .select((col("event_id") % 4).as("b"),
           to_json(struct(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("us"))).as("js"))
-        .collect()
-      (0 to 3).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("us", LongType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(feed)
-        .withColumn("ts", timestamp_micros(col("us")))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = streamingSessions(stream, "30 minutes", "3650 days")
-          .writeStream.format("memory").queryName("t24_final")
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t24_final")
+            unix_micros(col("ts")).as("us")))))
+      sc.memory(streamingSessions(sc.feed("event_id BIGINT, user_id BIGINT, us BIGINT")
+          .withColumn("ts", timestamp_micros(col("us"))), "30 minutes", "3650 days"),
+        "complete")
         .select(col("user_id"), unix_micros(col("s_start")).as("s_start_us"),
           col("n"))
-    }),
+    },
 
     // T25 (r14): STREAMING CDC MERGE-APPLY under the external oracle —
     // t20's foreachBatch upsert loop graded by DuckDB (VERDICT r13
@@ -653,66 +708,33 @@ object Streams {
     // with a FULL JOIN. All four clause branches are live at every SF:
     // matched-delete, matched-update, unmatched-insert, and the
     // unmatched-delete no-op.
-    "t25_stream_cdc_apply" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val tag = dirTag(d)
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t25_feed_$tag").toString
-      val tbl = s"t25_balance_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(path))
-      val orders = graft.Tables.orders(s, d)
-      orders.filter(col("o_orderstatus") === "F")
+    scenario("t25_stream_cdc_apply", parts = 8) { (s, d, sc) =>
+      def perCustomer(status: String): DataFrame = graft.Tables.orders(s, d)
+        .filter(col("o_orderstatus") === status)
         .groupBy(col("o_custkey").as("custkey"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)")).as("cents"))
-        .write.option("path", path).saveAsTable(tbl)
-      // the change feed is derived once and its (key-unique, key-
-      // disjoint) parity halves staged driver-side (see [[stageLines]];
-      // was r17's localCheckpoint + two repartition(1) feed writes) —
-      // each batch MERGEs on custkey, so order within a batch is
-      // irrelevant and the parity memberships are identical
-      rmTree(new java.io.File(feed))
-      val changes = orders.filter(col("o_orderstatus") === "O")
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)")).as("cents"))
+      perCustomer("F").write.option("path", sc.path("table")).saveAsTable(sc.table)
+      // the change feed's key-unique, key-disjoint parity halves — each
+      // batch MERGEs on custkey, so order within a batch is irrelevant
+      sc.stageBatches(2, perCustomer("O")
         .withColumn("op", when(col("n") >= 5, lit("D")).otherwise(lit("U")))
         .select((col("custkey") % 2).as("b"),
-          to_json(struct(col("custkey"), col("n"), col("cents"), col("op")))
-            .as("js"))
-        .collect()
-      (0 to 1).foreach(b => stageLines(feed, b,
-        changes.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("custkey", LongType), StructField("n", LongType),
-        StructField("cents", LongType), StructField("op", StringType)))
-      val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
-        val v = s"t25_changes_$tag"
-        batch.createOrReplaceTempView(v)
-        batch.sparkSession.sql(
-          s"""MERGE INTO $tbl t USING $v s ON t.custkey = s.custkey
-             |WHEN MATCHED AND s.op = 'D' THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET n = t.n + s.n, cents = t.cents + s.cents
-             |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (custkey, n, cents)
-             |  VALUES (s.custkey, s.n, s.cents)""".stripMargin)
-      }
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .writeStream.foreachBatch(applyBatch).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.sql(s"SELECT custkey, n, cents FROM $tbl")
-    }),
+          to_json(struct(col("custkey"), col("n"), col("cents"), col("op")))))
+      sc.drain(sc.feed("custkey BIGINT, n BIGINT, cents BIGINT, op STRING")
+        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          val v = s"${sc.table}_changes"
+          batch.createOrReplaceTempView(v)
+          batch.sparkSession.sql(
+            s"""MERGE INTO ${sc.table} t USING $v s ON t.custkey = s.custkey
+               |WHEN MATCHED AND s.op = 'D' THEN DELETE
+               |WHEN MATCHED THEN UPDATE SET n = t.n + s.n, cents = t.cents + s.cents
+               |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (custkey, n, cents)
+               |  VALUES (s.custkey, s.n, s.cents)""".stripMargin)
+          ()
+        }.outputMode("append"))
+      s.sql(s"SELECT custkey, n, cents FROM ${sc.table}")
+    },
 
     // T26 (r14): STREAMING EXACT DEDUP under the external oracle — t6/
     // t15's cross-batch dedup state graded by DuckDB: the feed carries
@@ -725,43 +747,19 @@ object Streams {
     // matter which copy a trigger sees first). No watermark: bounded-
     // state TTL eviction is t15's StreamCheck scenario; this pins the
     // dedup itself.
-    "t26_stream_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t26_feed_${dirTag(d)}").toString
-      // one NARROW collect stages base + duplicate batches driver-side
-      // (see [[stageLines]]): the duplicate copies are byte-identical
-      // rows, so the surviving set is deterministic regardless of batch
-      // membership or which copy a trigger sees first — a deterministic
-      // id%2 split replaces the round-robin repartition(2), and the
-      // copies stay a SEPARATE (now provably LAST) file so they arrive
-      // in a different micro-batch than their originals
-      rmTree(new java.io.File(feed))
-      val rows = graft.Tables.events(s, d)
-        .select(col("event_id"),
-          to_json(struct(col("event_id"), col("user_id"),
-            col("event_type"))).as("js"))
-        .collect()
-      (0 to 1).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) % 2 == b).map(_.getString(1))))
-      stageLines(feed, 2,
-        rows.toSeq.filter(_.getLong(0) % 3 == 0).map(_.getString(1)))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .dropDuplicates("event_id")
-          .writeStream.format("memory").queryName("t26_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t26_final").select(col("event_id"), col("user_id"),
-        col("event_type"))
-    }),
+    scenario("t26_stream_dedup", parts = 8) { (s, d, sc) =>
+      // the duplicate copies are byte-identical rows, so the surviving
+      // set is deterministic regardless of batch membership or which
+      // copy a trigger sees first — a deterministic id%2 split serves,
+      // and the copies are a SEPARATE (provably LAST) file so they
+      // arrive in a different micro-batch than their originals
+      val rows = sc.stageBatches(2, graft.Tables.events(s, d)
+        .select((col("event_id") % 2).as("b"), col("event_id"),
+          to_json(struct(col("event_id"), col("user_id"), col("event_type")))))
+      sc.stage("feed", 2, rows.filter(_.getLong(1) % 3 == 0).map(_.getString(2)))
+      sc.memory(sc.feed("event_id BIGINT, user_id BIGINT, event_type STRING")
+        .dropDuplicates("event_id"), "append")
+    },
 
     // T27 (r14): STREAM–STATIC ENRICH under the external oracle — t10's
     // scenario graded by DuckDB: the event stream joins the STATIC
@@ -774,43 +772,20 @@ object Streams {
     // from the raw tables. Every fixture user resolves to a customer
     // (ids 0–149 ⊂ customer keys), so the inner join drops nothing and
     // the parity covers all rows.
-    "t27_stream_static_enrich" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t27_feed_${dirTag(d)}").toString
-      // one NARROW collect stages the three batches driver-side (see
-      // [[stageLines]]): per-row broadcast enrich + complete-mode
-      // aggregate — the final table is independent of batch membership
-      // (oracle recomputes join+GROUP BY from the raw tables); id%3
-      // replaces the round-robin repartition(3)
-      rmTree(new java.io.File(feed))
-      val rows = graft.Tables.events(s, d)
+    scenario("t27_stream_static_enrich", parts = 8) { (s, d, sc) =>
+      // per-row broadcast enrich + complete-mode aggregate — the final
+      // table is independent of batch membership (the oracle recomputes
+      // join+GROUP BY from the raw tables); an id%3 split serves
+      sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"),
-          to_json(struct(col("event_id"), col("user_id"),
-            col("event_type"))).as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType)))
+          to_json(struct(col("event_id"), col("user_id"), col("event_type")))))
       val dim = graft.Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .join(broadcast(dim), col("user_id") === col("c_custkey"))
-          .groupBy(col("c_mktsegment"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("t27_final")
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t27_final")
-        .select(col("c_mktsegment"), col("event_type"), col("n"))
-    }),
+      sc.memory(sc.feed("event_id BIGINT, user_id BIGINT, event_type STRING")
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("n")), "complete")
+    },
 
     // T28 (r14): SLIDING-WINDOW AGGREGATION under the external oracle —
     // t3's overlapping-window semantics graded by DuckDB: 10-minute
@@ -821,43 +796,23 @@ object Streams {
     // (floor-to-slide and its 5-minute predecessor) — any drift in
     // Spark's window instancing (alignment, half-open bounds, overlap
     // count) breaks the hash.
-    "t28_stream_sliding_window" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val feed = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t28_feed_${dirTag(d)}").toString
-      // one NARROW collect stages the three batches driver-side (see
-      // [[stageLines]]): complete-mode sliding-window aggregate with no
-      // watermark — final table independent of batch membership (oracle
-      // materializes both covering windows per event); id%3 replaces
-      // the round-robin repartition(3)
-      rmTree(new java.io.File(feed))
-      val rows = graft.Tables.events(s, d)
+    scenario("t28_stream_sliding_window", parts = 8) { (s, d, sc) =>
+      // complete-mode sliding-window aggregate with no watermark — the
+      // final table is independent of batch membership (the oracle
+      // materializes both covering windows per event); an id%3 split
+      // serves
+      sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"),
           to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
-            col("event_type"))).as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("event_type", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
+            col("event_type")))))
+      sc.memory(sc.feed("event_id BIGINT, us BIGINT, event_type STRING")
           .withColumn("ts", timestamp_micros(col("us")))
           .groupBy(window(col("ts"), "10 minutes", "5 minutes"),
             col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("t28_final")
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t28_final")
+          .agg(count(lit(1)).as("n")), "complete")
         .select(unix_micros(col("window.start")).as("win_us"),
           col("event_type"), col("n"))
-    }),
+    },
 
     // T29 (r14): EXACTLY-ONCE PARQUET FILE SINK under the external
     // oracle — the one sink class t22–t28 left engine-graded: the memory
@@ -872,50 +827,23 @@ object Streams {
     // the raw events — any dropped batch, double-committed file, or
     // projection drift breaks it. Fresh sink+checkpoint dirs per run
     // keep the entry rerun-deterministic.
-    "t29_stream_file_sink" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val tag = dirTag(d)
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_t29_$tag").toString
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect stages the three batches driver-side (see
-      // [[stageLines]]): a stateless per-row projection into the
-      // transactional file sink lands every row exactly once regardless
-      // of batch membership (oracle recomputes from the raw events);
-      // id%3 replaces the round-robin repartition(3)
-      val rows = graft.Tables.events(s, d)
+    scenario("t29_stream_file_sink", parts = 8) { (s, d, sc) =>
+      // a stateless per-row projection into the transactional file sink
+      // lands every row exactly once regardless of batch membership (the
+      // oracle recomputes from the raw events); an id%3 split serves
+      sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"),
           to_json(struct(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))).as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", org.apache.spark.sql.types.DoubleType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("CAST(ROUND(value * 1e2, 0) AS BIGINT)").as("cents"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.read.parquet(s"$base/out")
+            col("value")))))
+      sc.drain(sc.feed("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          expr("CAST(ROUND(value * 1e2, 0) AS BIGINT)").as("cents"))
+        .writeStream.format("parquet").option("path", sc.path("out"))
+        .option("checkpointLocation", sc.path("ckpt")).outputMode("append"))
+      s.read.parquet(sc.path("out"))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("cents"))
-    }),
+    },
 
     // T30 (r14): EXACTLY-ONCE RESUME ACROSS RUNS under the external
     // oracle — Trigger.AvailableNow, the trigger a cron-scheduled
@@ -929,56 +857,30 @@ object Streams {
     // This is the across-RESTART half of the exactly-once contract
     // (t1/t29 grade within-run); the checkpoint + sink metadata log
     // carry it.
-    "t30_available_now_resume" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val tag = dirTag(d)
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_t30_$tag").toString
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect stages run 1's files now and run 2's later
-      // delivery after the first drain (see [[stageLines]]): a
-      // stateless projection through the checkpointed file source lands
-      // every row exactly once regardless of file membership (oracle
-      // recomputes from the raw events); id%4 quarters replace the two
-      // round-robin repartition(2) writes, keeping 2 files per run
+    scenario("t30_available_now_resume", parts = 8) { (s, d, sc) =>
+      // one collect stages run 1's files now and run 2's delivery after
+      // the first drain: a stateless projection through the checkpointed
+      // file source lands every row exactly once regardless of file
+      // membership (the oracle recomputes from the raw events); id%4
+      // quarters give 2 files per run
       val rows = graft.Tables.events(s, d)
         .select(col("event_id"),
-          to_json(struct(col("event_id"), col("user_id"),
-            col("event_type"))).as("js"))
-        .collect()
-      def stageHalf(run: Int): Unit = (0 to 1).foreach(q => stageLines(feed,
-        run * 2 + q,
-        rows.toSeq.filter(r => r.getLong(0) % 2 == run &&
-          (r.getLong(0) / 2) % 2 == q).map(_.getString(1))))
-      stageHalf(0)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      def runOnce(): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append").start()
-        q.awaitTermination() // AvailableNow self-terminates when drained
+          to_json(struct(col("event_id"), col("user_id"), col("event_type"))))
+        .collect().toSeq
+      def runOnce(run: Int): Unit = {
+        (0 to 1).foreach(q => sc.stage("feed", run * 2 + q,
+          rows.filter(r => r.getLong(0) % 2 == run && (r.getLong(0) / 2) % 2 == q)
+            .map(_.getString(1))))
+        sc.drain(sc.feed("event_id BIGINT, user_id BIGINT, event_type STRING")
+          .writeStream.format("parquet").option("path", sc.path("out"))
+          .option("checkpointLocation", sc.path("ckpt")).outputMode("append"),
+          availableNow = true)
       }
-      try {
-        runOnce()
-        stageHalf(1) // the between-runs delivery: odd half, 2 new files
-        runOnce()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.read.parquet(s"$base/out")
+      runOnce(0)
+      runOnce(1) // the between-runs delivery: odd half, 2 new files
+      s.read.parquet(sc.path("out"))
         .select(col("event_id"), col("user_id"), col("event_type"))
-    }),
+    },
 
     // T31 (r15): WATERMARK LATE-DROP under the external oracle — the
     // t5 semantics, previously the last engine-graded aggregation
@@ -1005,17 +907,10 @@ object Streams {
     // sail through against watermark 0) while eviction uses the
     // current one; the spacer batch brings the batch-0 watermark into
     // force for the late batch without advancing it further.
-    "t31_watermark_late_drop" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t31_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect feeds every driver decision and all five
-      // staged batches driver-side (see [[stageLines]]; was r17's
-      // localCheckpoint + a combined max() job + 5 repartition(1) stage
-      // jobs). Windowed counts and max-based watermark progression are
-      // order-independent within a batch; the id%3 split and the
+    scenario("t31_watermark_late_drop", parts = 8) { (s, d, sc) =>
+      // one collect feeds every driver decision and all five staged
+      // batches. Windowed counts and max-based watermark progression
+      // are order-independent within a batch; the id%3 split and the
       // sentinel rows are value-identical. The emptiness requires fire
       // BEFORE any max() so a broken fixture fails with the diagnostic,
       // not a NoSuchElementException (ADVICE r17).
@@ -1032,34 +927,22 @@ object Streams {
         .map(_.getLong(1)).max
       def flush(b: Int, us: Long): String =
         s"""{"event_id":${-b},"us":$us,"event_type":"flush"}"""
-      stageLines(feed, 0,
+      sc.stage("feed", 0,
         rows.toSeq.filter(_.getLong(0) % 3 != 0).map(_.getString(2)))
-      stageLines(feed, 1, Seq(flush(1, maxAUs))) // spacer: wm now in force
-      stageLines(feed, 2,
+      sc.stage("feed", 1, Seq(flush(1, maxAUs))) // spacer: wm now in force
+      sc.stage("feed", 2,
         rows.toSeq.filter(_.getLong(0) % 3 == 0).map(_.getString(2)))
-      stageLines(feed, 3, Seq(flush(3, maxUs + 30L * 86400000000L)))
-      stageLines(feed, 4, Seq(flush(4, maxUs + 60L * 86400000000L)))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("event_type", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
+      sc.stage("feed", 3, Seq(flush(3, maxUs + 30L * 86400000000L)))
+      sc.stage("feed", 4, Seq(flush(4, maxUs + 60L * 86400000000L)))
+      sc.memory(sc.feed("event_id BIGINT, us BIGINT, event_type STRING")
           .withColumn("ts", timestamp_micros(col("us")))
           .withWatermark("ts", "15 days")
           .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(unix_micros(col("window.start")).as("win_us"),
-            col("event_type"), col("n"))
-          .writeStream.format("memory").queryName("t31_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t31_final").filter(col("event_type") =!= "flush")
-        .select(col("win_us"), col("event_type"), col("n"))
-    }),
+            col("event_type"), col("n")), "append")
+        .filter(col("event_type") =!= "flush")
+    },
 
     // T32 (r15): INTERVAL-JOIN EVICTION under the external oracle —
     // t8b's left-outer stream-stream join with REALISTIC watermarks
@@ -1078,16 +961,9 @@ object Streams {
     // for never-matched purchases emit once the sentinel batches push
     // the watermark past their timestamps. Sub-day µs timestamps make
     // every boundary convention tie-free (checked per SF).
-    "t32_interval_join_eviction" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t32_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val (cFeed, pFeed) = (s"$base/clicks", s"$base/purchases")
-      // one NARROW collect feeds every driver decision and all nine
-      // staged batches driver-side (see [[stageLines]]; was r17's
-      // localCheckpoint + two aggregate jobs + 9 repartition(1) stage
-      // jobs). Join matching and max-based watermark progression are
+    scenario("t32_interval_join_eviction", parts = 4) { (s, d, sc) =>
+      // one collect feeds every driver decision and all nine staged
+      // batches. Join matching and max-based watermark progression are
       // order-independent within a batch; the click/purchase/cut
       // memberships and sentinel rows are value-identical.
       val rows = graft.Tables.events(s, d)
@@ -1119,34 +995,23 @@ object Streams {
       // slot-1 spacers AT each side's batch-0 max: the t31 one-batch
       // watermark lag — the late purchase batch must arrive with the
       // batch-0 watermark already in force, not advanced further
-      stageLines(cFeed, 0, clicks.toSeq.map(_.getString(2)))
-      stageLines(cFeed, 1, Seq(one(1, maxCUs, "spacer")))
-      stageLines(cFeed, 2, Seq(one(2, maxUs + 30L * 86400000000L, "flush")))
-      stageLines(cFeed, 3, Seq(one(3, maxUs + 60L * 86400000000L, "flush")))
-      stageLines(pFeed, 0, pa.toSeq.map(_.getString(2)))
-      stageLines(pFeed, 1, Seq(one(4, maxPaUs, "spacer")))
-      stageLines(pFeed, 2, pOld.toSeq.map(_.getString(2)))
-      stageLines(pFeed, 3, Seq(one(5, maxUs + 30L * 86400000000L, "flush")))
-      stageLines(pFeed, 4, Seq(one(6, maxUs + 60L * 86400000000L, "flush")))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("us", LongType), StructField("event_type", StringType)))
-      def feed(dir: String): DataFrame = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(dir)
-        .withColumn("ts", timestamp_micros(col("us")))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = intervalJoinLeftOuter(feed(pFeed), feed(cFeed),
-            watermark = "5 days", interval = "4 hours")
-          .select(col("p_id"), col("c_id"), col("p_user").as("user_id"))
-          .writeStream.format("memory").queryName("t32_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t32_final").filter(col("user_id") >= 0)
-        .select(col("p_id"), col("c_id"), col("user_id"))
-    }),
+      sc.stage("clicks", 0, clicks.toSeq.map(_.getString(2)))
+      sc.stage("clicks", 1, Seq(one(1, maxCUs, "spacer")))
+      sc.stage("clicks", 2, Seq(one(2, maxUs + 30L * 86400000000L, "flush")))
+      sc.stage("clicks", 3, Seq(one(3, maxUs + 60L * 86400000000L, "flush")))
+      sc.stage("purchases", 0, pa.toSeq.map(_.getString(2)))
+      sc.stage("purchases", 1, Seq(one(4, maxPaUs, "spacer")))
+      sc.stage("purchases", 2, pOld.toSeq.map(_.getString(2)))
+      sc.stage("purchases", 3, Seq(one(5, maxUs + 30L * 86400000000L, "flush")))
+      sc.stage("purchases", 4, Seq(one(6, maxUs + 60L * 86400000000L, "flush")))
+      def feed(name: String): DataFrame =
+        sc.feed("event_id BIGINT, user_id BIGINT, us BIGINT, event_type STRING", name)
+          .withColumn("ts", timestamp_micros(col("us")))
+      sc.memory(intervalJoinLeftOuter(feed("purchases"), feed("clicks"),
+          watermark = "5 days", interval = "4 hours")
+        .select(col("p_id"), col("c_id"), col("p_user").as("user_id")), "append")
+        .filter(col("user_id") >= 0)
+    },
 
     // T33 (r15): ARBITRARY STATEFUL PROCESSOR under the external
     // oracle — t11's transformWithState running stats graded by DuckDB
@@ -1157,15 +1022,17 @@ object Streams {
     // is the full per-batch state trajectory, which DuckDB recomputes
     // with windowed cumulative sums + a first-seen-batch type count.
     // Values ride as exact whole-double cents (order-independent FP).
-    "t33_stateful_running_stats" -> ((s, d) =>
-      statefulTrajectory(s, d, "t33", evs => runningStats(evs).toDF(), "update")),
+    scenario("t33_stateful_running_stats", parts = 8, rocksDb = true) { (s, d, sc) =>
+      sc.memory(runningStats(centsEvents(s, d, sc)).toDF(), "update")
+    },
 
     // T34 (r15): t7's flatMapGroupsWithState sessionizer under the same
     // external grading — the cumulative (n, total) trajectory plus the
     // closed_by_timeout=false flag of the NoTimeout deterministic mode.
-    "t34_stateful_sessionize" -> ((s, d) =>
-      statefulTrajectory(s, d, "t34",
-        evs => sessionize(evs, timeoutMs = 0).toDF(), "append")),
+    // (The RocksDB provider is harmless for flatMapGroupsWithState.)
+    scenario("t34_stateful_sessionize", parts = 8, rocksDb = true) { (s, d, sc) =>
+      sc.memory(sessionize(centsEvents(s, d, sc), timeoutMs = 0).toDF(), "append")
+    },
 
     // T35 (r16): UPSERT REPLAY GATE under the external oracle — t9's
     // effectively-once foreachBatch sink graded by DuckDB (VERDICT r15
@@ -1182,64 +1049,21 @@ object Streams {
     // latest-wins merge is value-idempotent, but a broken gate plus a
     // non-idempotent future merge is exactly what this guards), or a
     // tie broken differently all break the hash.
-    "t35_upsert_replay_gate" -> ((s, d) => {
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t35_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val (feed, ckpt) = (s"$base/feed", s"$base/ckpt")
-      // one NARROW collect stages all three batches driver-side (see
-      // [[stageLines]]): the store's latest-wins merge is a total order
-      // on (ts, event_id) — order-independent within a batch — and the
-      // id%3 batch membership is the identical row multiset
-      val rows = graft.Tables.events(s, d)
-        .select((col("event_id") % 3).as("b"),
-          to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
-            col("user_id"), col("event_type"),
-            expr("CAST(CAST(ROUND(value * 1e2, 0) AS BIGINT) AS DOUBLE)")
-              .as("value"))).as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType)))
+    scenario("t35_upsert_replay_gate", parts = 8) { (s, d, sc) =>
+      val evs = centsEvents(s, d, sc)
       val store = new UpsertStore
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      def runStream(): Unit = {
-        import s.implicits._
-        val evs = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
-            col("user_id"), col("event_type"), col("value")).as[Ev]
-        val q = upsertSink(evs, store)
-          .option("checkpointLocation", ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      try {
-        runStream()
-        // the injected crash: the sink committed batch 2 but the
-        // checkpoint's commit marker never landed — on restart the
-        // engine re-delivers batch 2 under the same id
-        val commits = new java.io.File(s"$ckpt/commits")
-        val markers = commits.listFiles.filter(_.getName.forall(_.isDigit))
-        require(markers.nonEmpty, "t35: no commit markers in the checkpoint")
-        val last = markers.maxBy(_.getName.toInt)
-        // the local checksum FS keeps a .N.crc sidecar; it must go with
-        // the marker or the replayed commit write trips over it
-        new java.io.File(commits, s".${last.getName}.crc").delete()
-        require(last.delete(), "t35: could not drop the last commit marker")
-        runStream()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      def run(): Unit =
+        sc.drain(upsertSink(evs, store).option("checkpointLocation", sc.path("ckpt")))
+      run()
+      sc.dropLastCommit("ckpt")
+      run()
       require(store.gateSkips >= 1,
         "t35: the replayed batch never reached the gate")
       import s.implicits._
       store.rows.toSeq
         .map { case (k, (us, id, v)) => (k, us, id, v.toLong) }
         .toDF("user_id", "us", "event_id", "cents")
-    }),
+    },
 
     // T36 (r16): SCD2 TEMPORAL ENRICHMENT under the external oracle —
     // t14's stream-side slowly-changing-dimension join graded by
@@ -1253,21 +1077,14 @@ object Streams {
     // version). Batching is irrelevant to the per-row stream-static
     // join — the three id%3 batches pin the harness shape, and the
     // oracle recomputes every (event, version-at-event-time) pair.
-    "t36_scd2_enrich" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t36_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect feeds the cutover derivation and all three
-      // staged batches driver-side (see [[stageLines]]): the per-row
-      // stream-static join is order-independent and the id%3 batch
-      // membership is the identical row multiset
-      val rows = graft.Tables.events(s, d)
+    scenario("t36_scd2_enrich", parts = 8) { (s, d, sc) =>
+      // one collect feeds the cutover derivation and all three staged
+      // batches: the per-row stream-static join is order-independent and
+      // the id%3 batch membership is the identical row multiset
+      val rows = sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"), unix_micros(col("ts")).as("us"),
           to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
-            col("user_id"))).as("js"))
-        .collect()
+            col("user_id")))))
       require(rows.nonEmpty, "t36: fixture events are empty")
       val cutUs = rows.iterator.map(_.getLong(1)).max -
         15L * 86400000000L
@@ -1288,25 +1105,10 @@ object Streams {
       // (Released by ContextCleaner GC when the entry's frames drop —
       // the documented pagerank pattern; entry-scoped, key-sized.)
       val dim = v1.unionByName(v2).localCheckpoint()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(2))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("user_id", LongType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val events = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .withColumn("ts", timestamp_micros(col("us")))
-        val q = enrichScd2(events, dim, "user_id")
-          .select(col("event_id"), col("tier"))
-          .writeStream.format("memory").queryName("t36_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t36_final").select(col("event_id"), col("tier"))
-    }),
+      sc.memory(enrichScd2(sc.feed("event_id BIGINT, us BIGINT, user_id BIGINT")
+          .withColumn("ts", timestamp_micros(col("us"))), dim, "user_id")
+        .select(col("event_id"), col("tier")), "append")
+    },
 
     // T37 (r16): STREAMING INCREMENTAL DEDUP under the external oracle
     // — t15's within-stream content dedup + standing-corpus anti-join
@@ -1321,26 +1123,20 @@ object Streams {
     // leaky anti-join emits a corpus digest, an over-eager drop loses
     // one — all hash-visible. Which same-text doc_id survives is
     // engine-unspecified, so doc-level columns stay out by design.
-    "t37_stream_incremental_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t37_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect stages all three batches driver-side (see
-      // [[stageLines]]): output is the emitted digest SET (dedup state
-      // absorbs re-ships; duplicates are byte-identical), so only batch
-      // membership matters and the id%3 + id%5 re-ship memberships are
-      // identical row multisets
+    scenario("t37_stream_incremental_dedup", parts = 8) { (s, d, sc) =>
+      // output is the emitted digest SET (dedup state absorbs re-ships;
+      // duplicates are byte-identical), so only batch membership matters
+      // and the id%3 + id%5 re-ship memberships are identical row
+      // multisets
       val rows = graft.Tables.documents(s, d)
         .select(col("doc_id"),
-          to_json(struct(col("doc_id"), col("text"))).as("js"))
-        .collect()
-      def slice(b: Int) = rows.toSeq.filter(_.getLong(0) % 3 == b)
+          to_json(struct(col("doc_id"), col("text"))))
+        .collect().toSeq
+      def slice(b: Int) = rows.filter(_.getLong(0) % 3 == b)
       def reship(b: Int) = slice(b).filter(_.getLong(0) % 5 == 0)
-      stageLines(feed, 0, slice(0).map(_.getString(1)))
-      stageLines(feed, 1, (slice(1) ++ reship(0)).map(_.getString(1)))
-      stageLines(feed, 2, (slice(2) ++ reship(1)).map(_.getString(1)))
+      sc.stage("feed", 0, slice(0).map(_.getString(1)))
+      sc.stage("feed", 1, (slice(1) ++ reship(0)).map(_.getString(1)))
+      sc.stage("feed", 2, (slice(2) ++ reship(1)).map(_.getString(1)))
       // digest-sized static side, re-executed every micro-batch by the
       // stream-static anti join — materialize once instead of hashing
       // the src0/src1 text per trigger. (Released by ContextCleaner GC
@@ -1350,25 +1146,14 @@ object Streams {
         .select(md5(col("text")
           .cast(org.apache.spark.sql.types.BinaryType)).as("text_md5"))
         .distinct().localCheckpoint()
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          // constant event time + a years-wide watermark: the dedup
-          // state must span every batch (t15's bounded-state lateness
-          // semantics are t5/t31's subject, not this entry's)
-          .withColumn("ts", timestamp_micros(lit(1700000000000000L)))
-        val q = streamingDedup(in, corpus, watermark = "3650 days")
-          .select(col("text_md5"))
-          .writeStream.format("memory").queryName("t37_final")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t37_final").select(col("text_md5"))
-    }),
+      // constant event time + a years-wide watermark: the dedup state
+      // must span every batch (t15's bounded-state lateness semantics
+      // are t5/t31's subject, not this entry's)
+      val in = sc.feed("doc_id BIGINT, text STRING")
+        .withColumn("ts", timestamp_micros(lit(1700000000000000L)))
+      sc.memory(streamingDedup(in, corpus, watermark = "3650 days")
+        .select(col("text_md5")), "append")
+    },
 
     // T38 (r16): CORRUPT-RECORD QUARANTINE under the external oracle —
     // t12's 24/7-ingest failure mode graded by DuckDB: a continuously
@@ -1382,51 +1167,29 @@ object Streams {
     // the final table, which the oracle recomputes from the same %7
     // rule — a dropped bad line, a died stream, or a half-parsed row
     // leaking field values all break the hash.
-    "t38_stream_corrupt_quarantine" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t38_${dirTag(d)}").toString
-      rmTree(new java.io.File(base))
-      val feed = s"$base/feed"
-      // one NARROW collect stages all three batches driver-side (see
-      // [[stageLines]]; the corruption expression is unchanged — the
-      // same to_json + substring runs in the projection, the driver
-      // only groups the finished lines): the complete-mode audit is a
+    scenario("t38_stream_corrupt_quarantine", parts = 8) { (s, d, sc) =>
+      // the corruption expression runs in the projection, the driver
+      // only groups the finished lines: the complete-mode audit is a
       // whole-feed aggregate, so only batch membership matters and the
       // id%3 split is the identical row multiset
-      val rows = graft.Tables.documents(s, d)
+      sc.stageBatches(3, graft.Tables.documents(s, d)
         .withColumn("js",
           to_json(struct(col("doc_id"), col("lang"), col("n_chars"))))
         .select((col("doc_id") % 3).as("b"),
           when(col("doc_id") % 7 === 0,
             expr("substring(js, 1, length(js) - 1)"))
-          .otherwise(col("js")).as("value"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("lang", StringType),
-        StructField("n_chars", LongType),
-        StructField("_corrupt_record", StringType)))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val parsed = s.readStream.schema(schema)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt_record")
-          .option("maxFilesPerTrigger", "1").json(feed)
-        val q = parsed
-          .groupBy(col("_corrupt_record").isNotNull.as("quarantined"),
-            col("lang"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars")).cast(LongType).as("chars_total"))
-          .writeStream.format("memory").queryName("t38_final")
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("t38_final")
-        .select(col("quarantined"), col("lang"), col("n"), col("chars_total"))
-    }),
+          .otherwise(col("js"))))
+      // PERMISSIVE is the JSON reader's default mode, and
+      // `_corrupt_record` its default corrupt-record column
+      // (spark.sql.columnNameOfCorruptRecord): naming it in the schema
+      // is what quarantines a malformed line into it
+      sc.memory(sc.feed(
+          "doc_id BIGINT, lang STRING, n_chars BIGINT, _corrupt_record STRING")
+        .groupBy(col("_corrupt_record").isNotNull.as("quarantined"),
+          col("lang"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("n_chars")).cast("bigint").as("chars_total")), "complete")
+    },
 
     // T39 (r17): STREAMING APPEND INTO A GOVERNED TABLE — the
     // lakehouse ingest loop end-to-end: foreachBatch micro-batches
@@ -1448,129 +1211,44 @@ object Streams {
     // CDC feed + nightly compactor sharing one commit log: each batch
     // costs O(batch), compaction costs O(fragmented slice), and the
     // shared OCC lock means they can never silently interleave.
-    "t39_stream_table_append" -> ((s, d) => {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_t39_${dirTag(d)}").toString
-      val (feed, ckpt, tloc) = (s"$base/feed", s"$base/ckpt", s"$base/table")
-      val tbl = s"t39_ingest_${dirTag(d)}".replaceAll("[^0-9a-zA-Z_]", "_")
-      // drop BEFORE deleting the location — the reverse order makes the
-      // catalog's drop-time listing log a spurious FileNotFound
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      rmTree(new java.io.File(base))
+    scenario("t39_stream_table_append", parts = 8) { (s, d, sc) =>
       // pre-create the location: CREATE TABLE probes it for stream-sink
       // metadata and logs a spurious WARN stack when it's absent
-      new java.io.File(tloc).mkdirs()
+      new java.io.File(sc.path("table")).mkdirs()
       s.sql(
-        s"""CREATE TABLE $tbl (event_id BIGINT, user_id BIGINT, us BIGINT,
+        s"""CREATE TABLE ${sc.table} (event_id BIGINT, user_id BIGINT, us BIGINT,
            |  cents BIGINT, b INT) USING parquet PARTITIONED BY (b)
-           |LOCATION '$tloc'""".stripMargin)
-      // one NARROW collect stages all three batches driver-side (see
-      // [[stageLines]]): each batch is one manifest commit of a key-
-      // disjoint row set — order within a batch never reaches the
-      // output (the table is read back as rows) — and the id%3 batch
-      // membership is the identical row multiset
-      val rows = graft.Tables.events(s, d)
+           |LOCATION '${sc.path("table")}'""".stripMargin)
+      // each batch is one manifest commit of a key-disjoint row set —
+      // order within a batch never reaches the output (the table is read
+      // back as rows) — and the id%3 batch membership is the identical
+      // row multiset
+      sc.stageBatches(3, graft.Tables.events(s, d)
         .select((col("event_id") % 3).as("b"),
           to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
             col("user_id"),
-            expr("CAST(ROUND(value * 1e2, 0) AS BIGINT)").as("cents")))
-            .as("js"))
-        .collect()
-      (0 to 2).foreach(b => stageLines(feed, b,
-        rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("us", LongType),
-        StructField("user_id", LongType), StructField("cents", LongType)))
+            expr("CAST(ROUND(value * 1e2, 0) AS BIGINT)").as("cents")))))
+      val in = sc.feed("event_id BIGINT, us BIGINT, user_id BIGINT, cents BIGINT")
+        .select(col("event_id"), col("user_id"), col("us"), col("cents"),
+          (col("event_id") % 3).cast("int").as("b"))
       val skips = new java.util.concurrent.atomic.AtomicInteger(0)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      def runStream(): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(feed)
-          .select(col("event_id"), col("user_id"), col("us"), col("cents"),
-            (col("event_id") % 3).cast("int").as("b"))
-          .writeStream
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            // the micro-batch lands parallel (fragmented) files — the
-            // reality OPTIMIZE exists for
-            val frag = df.repartition(6, col("user_id"))
-            if (!graft.plans.StreamTableAppend.appendBatch(s, tbl, frag, id))
-              skips.incrementAndGet(): Unit
-          }
-          .option("checkpointLocation", ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      try {
-        runStream()
-        graft.plans.Compaction.compact(s, tbl, maxFilesPerDir = 4)
-        val commits = new java.io.File(s"$ckpt/commits")
-        val markers = commits.listFiles.filter(_.getName.forall(_.isDigit))
-        require(markers.nonEmpty, "t39: no commit markers in the checkpoint")
-        val last = markers.maxBy(_.getName.toInt)
-        new java.io.File(commits, s".${last.getName}.crc").delete()
-        require(last.delete(), "t39: could not drop the last commit marker")
-        runStream()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      def run(): Unit = sc.drain(in.writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          // the micro-batch lands parallel (fragmented) files — the
+          // reality OPTIMIZE exists for
+          val frag = df.repartition(6, col("user_id"))
+          if (!graft.plans.StreamTableAppend.appendBatch(s, sc.table, frag, id))
+            skips.incrementAndGet(): Unit
+        }
+        .option("checkpointLocation", sc.path("ckpt")))
+      run()
+      graft.plans.Compaction.compact(s, sc.table, maxFilesPerDir = 4)
+      sc.dropLastCommit("ckpt")
+      run()
       require(skips.get >= 1, "t39: the replayed batch never hit the gate")
-      s.sql(s"SELECT event_id, user_id, us, cents, b FROM $tbl")
-    })
-  )
-
-  /** Shared harness for t33/t34: cents-valued Ev feed in three
-    * id%3-pinned batches through a stateful processor into a memory
-    * sink, under the RocksDB store provider (required by
-    * transformWithState; harmless for flatMapGroupsWithState).
-    */
-  private def statefulTrajectory(s: SparkSession, d: String, tag: String,
-      proc: Dataset[Ev] => DataFrame, mode: String): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${dirTag(d)}").toString
-    rmTree(new java.io.File(base))
-    val feed = s"$base/feed"
-    // one NARROW collect stages all three batches driver-side (see
-    // [[stageLines]]; was r17's localCheckpoint + 3 repartition(1)
-    // stage jobs). The per-key state folds are order-independent within
-    // a batch — exact whole-double cents sums and counts — and the
-    // id%3 batch membership is the identical row multiset.
-    val rows = graft.Tables.events(s, d)
-      .select((col("event_id") % 3).as("b"),
-        to_json(struct(col("event_id"), unix_micros(col("ts")).as("us"),
-          col("user_id"), col("event_type"),
-          expr("CAST(CAST(ROUND(value * 1e2, 0) AS BIGINT) AS DOUBLE)")
-            .as("value"))).as("js"))
-      .collect()
-    (0 to 2).foreach(b => stageLines(feed, b,
-      rows.toSeq.filter(_.getLong(0) == b).map(_.getString(1))))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("us", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevStore = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import s.implicits._
-      val evs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(feed)
-        .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
-          col("user_id"), col("event_type"), col("value")).as[Ev]
-      val q = proc(evs)
-        .writeStream.format("memory").queryName(s"${tag}_final")
-        .outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevStore match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      s.sql(s"SELECT event_id, user_id, us, cents, b FROM ${sc.table}")
     }
-    s.table(s"${tag}_final")
-  }
+  )
 
   val oracles: Map[String, String] = Map(
     // the batch side of the parity contract: plain GROUP BY over the

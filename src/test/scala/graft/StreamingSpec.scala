@@ -409,4 +409,53 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       }
     }
   }
+
+  // The oracle entries' scenario runner (Streams.scenario): the session
+  // conf it sets must come back even when the query dies mid-stream, and
+  // a file left in the entry's feed directory must never be consumed.
+  private val provider = "spark.sql.streaming.stateStore.providerClass"
+
+  test("scenario runner restores shuffle partitions and the state-store provider after a failed query") {
+    val boom = udf((id: Long) => {
+      if (id == 2L) throw new IllegalStateException("boom"); id
+    })
+    val (_, failing) = Streams.scenario("tx1_failing", parts = 3, rocksDb = true) {
+      (_, _, sc) =>
+        sc.stage("feed", 0, Seq("""{"id":1}"""))
+        sc.stage("feed", 1, Seq("""{"id":2}"""))
+        sc.memory(sc.feed("id BIGINT").select(boom(col("id")).as("id")), "append")
+    }
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val prior = spark.conf.getAll.get(provider)
+    try {
+      spark.conf.unset(provider)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        failing(spark, sf("sf0.001")))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === parts)
+      assert(spark.conf.getAll.get(provider) === None, "an unset provider must stay unset")
+      val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+      spark.conf.set(provider, hdfs)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        failing(spark, sf("sf0.001")))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === parts)
+      assert(spark.conf.getAll.get(provider) === Some(hdfs))
+    } finally prior match {
+      case Some(p) => spark.conf.set(provider, p)
+      case None => spark.conf.unset(provider)
+    }
+  }
+
+  test("scenario runner empties the entry's feed directory: a stale batch is not consumed") {
+    import spark.implicits._
+    var feedDir = ""
+    val (_, probe) = Streams.scenario("tx2_stale", parts = 3) { (_, _, sc) =>
+      feedDir = sc.path("feed")
+      sc.stage("feed", 0, Seq("""{"id":1}""", """{"id":2}"""))
+      sc.memory(sc.feed("id BIGINT"), "append")
+    }
+    assert(probe(spark, sf("sf0.001")).as[Long].collect().sorted === Array(1L, 2L))
+    java.nio.file.Files.write(java.nio.file.Paths.get(feedDir, "batch99.json"),
+      "{\"id\":99}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(probe(spark, sf("sf0.001")).as[Long].collect().sorted === Array(1L, 2L))
+  }
 }
