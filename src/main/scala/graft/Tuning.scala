@@ -78,7 +78,20 @@ object Tuning {
     // The rule's upside (skipping rows with empty arrays pre-Generate)
     // is noise for text pipelines where arrays are almost never empty.
     "spark.sql.optimizer.excludedRules" ->
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    // Checkpoint and metadata-log files on local disk through java.nio:
+    // Hadoop's local FS forks a chmod and four readlinks per file without
+    // libhadoop, ~21 process spawns per micro-batch (measured: walCommit
+    // 28.5 ms and commitOffsets 27.4 ms of a 3-game pull, almost all of
+    // it spawns). Other schemes keep Spark's own manager.
+    streaming.LocalCheckpointFiles.ConfKey ->
+      classOf[streaming.LocalCheckpointFiles].getName,
+    // Each streaming query clones the session, and a clone with artifact
+    // isolation gets its own class loader, which is part of the codegen
+    // cache key: every runStream recompiled its identical classes (4 per
+    // incremental pull, 51 ms). The engine adds no jars or artifacts at
+    // runtime, so one shared loader loses nothing.
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Shuffle partition count: ~2 partitions per core, floor of 2× the
     * default parallelism — at 100 TB override with (input bytes /

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Driver-side incremental extraction (SURVEY.md §2A R1–R3).
@@ -24,13 +25,13 @@ class Extract(stateDir: Path) {
   /** The committed watermark; a file that does not hold one number (torn
     * or garbled) fails with [[Extract.BadWatermark]], naming file and content. */
   def loadWatermark(): Option[Long] = Option.when(Files.exists(wmFile)) {
-    val text = new String(Files.readAllBytes(wmFile))
+    val text = new String(Files.readAllBytes(wmFile), UTF_8)
     text.trim.toLongOption.getOrElse(throw new Extract.BadWatermark(wmFile, text))
   }
 
   private def saveWatermark(ts: Long): Unit = {
     Files.createDirectories(stateDir)
-    Files.write(wmFile, ts.toString.getBytes,
+    Files.write(wmFile, ts.toString.getBytes(UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 
@@ -46,7 +47,7 @@ class Extract(stateDir: Path) {
       // Deterministic name keyed by the window → a retried run overwrites
       // the same file instead of duplicating records downstream.
       val target = rawDir.resolve(s"games_${since.getOrElse(0L)}_$until.ndjson")
-      Files.write(target, lines.mkString("", "\n", "\n").getBytes)
+      Files.write(target, lines.mkString("", "\n", "\n").getBytes(UTF_8))
       Some(target)
     } else None
     saveWatermark(until) // durable write happened first (R2 fix)

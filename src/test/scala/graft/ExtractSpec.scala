@@ -121,6 +121,18 @@ class ExtractSpec extends AnyFunSuite {
     }
   }
 
+  test("the raw file holds the served NDJSON as UTF-8, whatever the JVM's default charset") {
+    val ndjson = """{"id":"g1","opening":{"name":"Grünfeld Defense"}}""" + "\n" +
+      """{"id":"g2","opening":{"name":"Réti Opening"}}""" + "\n"
+    withStubServer(200, ndjson) { (url, _) =>
+      val state = tempDir
+      val client = new LichessClient(LichessConfig(url, "u"))
+      val out = new Extract(state).run(client.fetch, state.resolve("raw"), 100L)
+      assert(java.nio.file.Files.readAllBytes(out.get).sameElements(
+        ndjson.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }
+  }
+
   test("config comes from env or .env file, env winning; absent -> None") {
     assert(LichessConfig.fromEnv(Map.empty, None) === None)
     val dir = tempDir

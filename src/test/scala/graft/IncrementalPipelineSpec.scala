@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
 
+  import IncrementalPipelineSpec.game
+
   test("streaming pipeline processes each raw file exactly once (R4/R11)") {
     val raw = java.nio.file.Files.createTempDirectory("chess_raw")
     val out = java.nio.file.Files.createTempDirectory("chess_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("chess_ckpt").toString
 
-    def game(id: String): String =
-      s"""{"id":"$id","variant":"standard","status":"mate","winner":"white","moves":"e4 e5","players":{"white":{"user":{"name":"w"}},"black":{"user":{"name":"b"}}},"opening":{"eco":"C20","name":"KP"}}"""
     def countGames(): Long =
       spark.read.text(out).filter("value like '[Game ID%'").count()
     // the puzzle generator's read: committed files only, every game
@@ -41,6 +41,24 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(readGames() === 3) // the stale part is not output
   }
 
+  test("a second runStream on the session, over a new raw file, compiles no code") {
+    val raw = java.nio.file.Files.createTempDirectory("chess_raw")
+    val out = java.nio.file.Files.createTempDirectory("chess_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("chess_ckpt").toString
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    java.nio.file.Files.write(raw.resolve("f1.ndjson"), game("c1").getBytes)
+    ChessPipeline.runStream(spark, raw.toString, out, ckpt)
+    val before = compiles()
+    java.nio.file.Files.write(raw.resolve("f2.ndjson"), game("c2").getBytes)
+    ChessPipeline.runStream(spark, raw.toString, out, ckpt)
+    // the query's cloned session shares the class loader, so the codegen
+    // cache (keyed by loader and source) serves every class again
+    assert(compiles() - before === 0)
+    assert(spark.read.format("pgn").load(out).count() === 2)
+  }
+
   test("EtlConfig parses the reference's yaml shape (R12)") {
     val f = java.nio.file.Files.createTempFile("etl", ".yml")
     java.nio.file.Files.write(f,
@@ -59,4 +77,10 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(c.transformedDataPath === "/data/out")
     assert(c.checkpointPath === "data/checkpoints") // default
   }
+}
+
+object IncrementalPipelineSpec {
+  /** One raw NDJSON game that passes the mate + standard filter. */
+  def game(id: String): String =
+    s"""{"id":"$id","variant":"standard","status":"mate","winner":"white","moves":"e4 e5","players":{"white":{"user":{"name":"w"}},"black":{"user":{"name":"b"}}},"opening":{"eco":"C20","name":"KP"}}"""
 }

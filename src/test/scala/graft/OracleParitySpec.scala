@@ -22,16 +22,18 @@ class OracleParitySpec extends AnyFunSuite with SparkTestBase {
   test("every SparkEntry query hash-matches its DuckDB oracle at sf0.001") {
     assume(oracleToolingPresent, "python3 + duckdb not available")
     val out = java.nio.file.Files.createTempDirectory("graft_parity").toString
-    val failedDumps = Verify.dump(spark, sf("sf0.001"), out, artifacts = false)
-    assert(failedDumps.isEmpty, s"queries threw during dump: $failedDumps")
-    val log = new StringBuilder
-    val rc = Process(Seq("python3", "tools/check.py", sf("sf0.001"), out),
-      new java.io.File(".")).!(ProcessLogger(l => log.append(l).append('\n')))
-    val fails = log.toString.linesIterator
-      .filter(l => l.startsWith("FAIL") || l.contains("EMPTY!")).toList
-    assert(rc == 0 && fails.isEmpty,
-      (fails :+ log.toString.linesIterator.toList.lastOption.getOrElse(""))
-        .mkString("\n"))
+    try {
+      val failedDumps = Verify.dump(spark, sf("sf0.001"), out, artifacts = false)
+      assert(failedDumps.isEmpty, s"queries threw during dump: $failedDumps")
+      val log = new StringBuilder
+      val rc = Process(Seq("python3", "tools/check.py", sf("sf0.001"), out),
+        new java.io.File(".")).!(ProcessLogger(l => log.append(l).append('\n')))
+      val fails = log.toString.linesIterator
+        .filter(l => l.startsWith("FAIL") || l.contains("EMPTY!")).toList
+      assert(rc == 0 && fails.isEmpty,
+        (fails :+ log.toString.linesIterator.toList.lastOption.getOrElse(""))
+          .mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   /** Run one SQL statement in DuckDB over the sf0.001 parquet tables and
