@@ -78,6 +78,12 @@ object LichessConfig {
   *    delivery where the reference's swallow-and-save loses the window
   *    (`extract.py:72-73`).
   *
+  * The body is streamed, never buffered: `fetch` returns once the
+  * response head has arrived, and the 2xx body is read line by line as
+  * the caller consumes the returned [[LichessClient.BodyLines]], so a
+  * window of any size costs the client one read buffer. The body of
+  * every non-2xx response is closed unread.
+  *
   * Transient failures retry with a BOUNDED budget (VERDICT r14 missing
   * #1 — the real export API rate-limits aggressively, and one 429 must
   * not kill a scheduled extract a short wait would save):
@@ -89,6 +95,12 @@ object LichessConfig {
   *    retrying cannot fix it.
   * Exhausted retries throw, so the watermark ordering is unchanged:
   * commit-after-write always.
+  *
+  * The retry budget covers the request up to the response head. A body
+  * that breaks after a 2xx head (connection reset, fewer bytes than its
+  * `Content-Length`) throws its IOException from the iterator, which
+  * fails the [[Extract.run]] consuming it without advancing the
+  * watermark; the next scheduled pull fetches the window again.
   *
   * `fetch` matches `Extract.run`'s `(Option[Long], Long) => Iterator[
   * String]` seam; tests drive it against an in-process stub server
@@ -126,7 +138,7 @@ class LichessClient(cfg: LichessConfig,
     * less than the server asked (RFC 9110 only licenses integers, but
     * proxies emit fractions in the wild); HTTP-date forms fall back to
     * the exponential schedule. */
-  private def retryAfterMs(resp: HttpResponse[String]): Option[Long] =
+  private def retryAfterMs(resp: HttpResponse[_]): Option[Long] =
     Option(resp.headers().firstValue("Retry-After").orElse(null))
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
       .filter(d => !d.isNaN && !d.isInfinite)
@@ -142,22 +154,24 @@ class LichessClient(cfg: LichessConfig,
     var attempt = 0
     while (true) {
       val resp =
-        try Right(client.send(req, HttpResponse.BodyHandlers.ofString(UTF_8)))
+        try Right(client.send(req, HttpResponse.BodyHandlers.ofInputStream()))
         catch { case e: java.io.IOException => Left(e) }
       resp match {
         case Right(r) if r.statusCode() >= 200 && r.statusCode() < 300 =>
-          return r.body().linesIterator.map(_.trim).filter(_.nonEmpty)
-        case Right(r) if r.statusCode() == 429 || r.statusCode() >= 500 =>
+          return new LichessClient.BodyLines(r.body())
+        case Right(r) =>
+          r.body().close()
+          val status = r.statusCode()
+          if (status != 429 && status < 500)
+            throw new java.io.IOException(
+              s"games-export API returned HTTP $status for ${req.uri()}")
           if (attempt >= cfg.maxRetries)
             throw new java.io.IOException(
-              s"games-export API returned HTTP ${r.statusCode()} for " +
+              s"games-export API returned HTTP $status for " +
                 s"${req.uri()} after ${attempt + 1} attempts")
-          sleeper(if (r.statusCode() == 429)
+          sleeper(if (status == 429)
             retryAfterMs(r).getOrElse(backoffMs(attempt))
           else backoffMs(attempt))
-        case Right(r) =>
-          throw new java.io.IOException(
-            s"games-export API returned HTTP ${r.statusCode()} for ${req.uri()}")
         case Left(e) =>
           if (attempt >= cfg.maxRetries) throw e
           sleeper(backoffMs(attempt))
@@ -169,6 +183,43 @@ class LichessClient(cfg: LichessConfig,
 }
 
 object LichessClient {
+
+  /** The trimmed, non-blank lines of an NDJSON body, decoded as UTF-8
+    * and read as the caller asks for them: one read buffer, whatever the
+    * body's size. A line ends at `\n`, `\r` or `\r\n`, as for
+    * `linesIterator`. The body is closed at its end, or by `close` when the
+    * caller stops early; a broken body throws its IOException from
+    * `hasNext`. */
+  final class BodyLines(body: java.io.InputStream) extends Iterator[String] with AutoCloseable {
+    private val in = new java.io.BufferedReader(new java.io.InputStreamReader(body, UTF_8), 1 << 15)
+    private var open = true
+    private var pending: String = null
+
+    def hasNext: Boolean = {
+      while (pending == null && open) {
+        val line = in.readLine()
+        if (line == null) close()
+        else {
+          val t = line.trim
+          if (t.nonEmpty) pending = t
+        }
+      }
+      pending != null
+    }
+
+    def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("end of the export body")
+      val line = pending
+      pending = null
+      line
+    }
+
+    def close(): Unit = if (open) {
+      open = false
+      in.close()
+    }
+  }
+
   lazy val defaultClient: HttpClient = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(10))
     .followRedirects(HttpClient.Redirect.NORMAL)

@@ -5,7 +5,7 @@ import graft.sources.Pgn
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference-parity tests: R5–R10 semantics + the S7 golden PGN. */
-class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
+class ChessPipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private lazy val games =
     ChessPipeline.puzzleGames(spark, ChessPipeline.samplePath)
@@ -38,7 +38,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("PGN DSv2 round trip preserves every field incl. nulls") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("pgn_rt").toString
+    val out = freshDir("pgn_rt").toString
     games.toDF().write.format("pgn").mode("overwrite").save(out)
     val back = spark.read.format("pgn").load(out)
       .as[graft.sources.PuzzleGame].collect()
@@ -55,7 +55,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("PGN sink writes once per partition via committer, content preserved") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("pgn_sink").toString
+    val out = freshDir("pgn_sink").toString
     Pgn.write(games, out)
     val back = spark.read.text(out)
     assert(back.filter("value like '[Game ID%'").count() === 5)
@@ -66,7 +66,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("DSV2 format(\"pgn\") writes committed per-partition pgn files") {
-    val out = java.nio.file.Files.createTempDirectory("pgn_dsv2").toString
+    val out = freshDir("pgn_dsv2").toString
     def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
       df.write.mode(mode).format("graft.sources.pgn.PgnDataSource").save(out)
     // overwrite leaves only the new write's parts
@@ -85,8 +85,6 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.format("pgn").load(out).count() === 5)
   }
 
-  private def tempDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix)
-
   /** `part-*` files of `dir`, in name order. */
   private def parts(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
     Option(dir.toFile.listFiles()).toSeq.flatten
@@ -94,7 +92,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("run numbers games globally across parts, in game_id order") {
     val sample = scala.io.Source.fromResource("graft/lichess_sample.ndjson").getLines().toVector
-    val raw = tempDir("pgn_multi_raw")
+    val raw = freshDir("pgn_multi_raw")
     // 3 files of 200 games (100 puzzle games each); every file's ids
     // spread over the whole id range, so each range partition draws on
     // every scan partition
@@ -106,7 +104,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
       }
       java.nio.file.Files.write(raw.resolve(s"games_$f.ndjson"), lines.mkString("", "\n", "\n").getBytes)
     }
-    val out = tempDir("pgn_multi_out")
+    val out = freshDir("pgn_multi_out")
     ChessPipeline.run(spark, raw.toString, out.toString)
     val files = parts(out)
     assert(files.size > 1, files)
@@ -120,13 +118,13 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("run on input without puzzle games leaves an empty, readable output") {
-    val out = tempDir("pgn_empty_out")
-    val noPuzzles = tempDir("pgn_no_puzzles")
+    val out = freshDir("pgn_empty_out")
+    val noPuzzles = freshDir("pgn_no_puzzles")
     java.nio.file.Files.write(noPuzzles.resolve("games.ndjson"),
       scala.io.Source.fromResource("graft/lichess_sample.ndjson").getLines()
         .filterNot(_.contains("\"status\":\"mate\"")).mkString("", "\n", "\n").getBytes)
     // an empty raw directory plans no scan partition at all
-    for (raw <- Seq(noPuzzles, tempDir("pgn_empty_raw"))) {
+    for (raw <- Seq(noPuzzles, freshDir("pgn_empty_raw"))) {
       ChessPipeline.run(spark, ChessPipeline.samplePath, out.toString)
       assert(parts(out).nonEmpty)
       ChessPipeline.run(spark, raw.toString, out.toString)
@@ -136,7 +134,7 @@ class ChessPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("observed metrics ride the sink job — no extra count scans (R6)") {
-    val out = java.nio.file.Files.createTempDirectory("pgn_obs").toString
+    val out = freshDir("pgn_obs").toString
     val metrics = ChessPipeline.runWithMetrics(spark, ChessPipeline.samplePath, out)
     assert(metrics.get("n_games") === Some(5L))
     assert(metrics.get("n_decided") === Some(5L))

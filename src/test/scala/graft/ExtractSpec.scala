@@ -1,15 +1,17 @@
 package graft
 
 import graft.pipeline.{Extract, LichessClient, LichessConfig}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** R1–R3 semantics: monotone [since, until) windows, watermark committed
   * only after the durable write (the reference's at-most-once ordering,
   * /root/reference/etl/extract.py:72-73, deliberately inverted).
   */
-class ExtractSpec extends AnyFunSuite {
+class ExtractSpec extends AnyFunSuite with TempDirs {
 
-  private def tempDir = java.nio.file.Files.createTempDirectory("extract")
+  private def tempDir = freshDir("extract")
 
   test("watermark advances across runs and windows are contiguous") {
     val state = tempDir
@@ -250,5 +252,100 @@ class ExtractSpec extends AnyFunSuite {
       .run((_, _) => Iterator.single("""{"id":"a"}"""), raw, 100L).get
     assert(f1 === f2)
     assert(java.nio.file.Files.list(raw).count() === 1)
+  }
+
+  private def names(dir: java.nio.file.Path): Seq[String] = {
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toVector.sorted finally s.close()
+  }
+
+  test("the client yields each line as it arrives, before the body ends") {
+    val yielded = new java.util.concurrent.CountDownLatch(1)
+    val sawYield = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", { exchange =>
+      exchange.sendResponseHeaders(200, 0) // chunked: the head goes out first
+      val out = exchange.getResponseBody
+      out.write(("""{"id":"g1"}""" + "\n").getBytes(UTF_8))
+      out.flush()
+      // a client that buffers the whole body never yields line 1 here
+      sawYield.set(yielded.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      out.write(("""{"id":"g2"}""" + "\n").getBytes(UTF_8))
+      exchange.close()
+    })
+    server.start()
+    try {
+      val state = tempDir
+      val client = new LichessClient(LichessConfig(
+        s"http://127.0.0.1:${server.getAddress.getPort}/api/games/user", "u"))
+      val out = new Extract(state).run(
+        (since, until) => client.fetch(since, until).map { line => yielded.countDown(); line },
+        state.resolve("raw"), 100L)
+      assert(sawYield.get(), "line 1 was not yielded while the body was still open")
+      assert(new String(java.nio.file.Files.readAllBytes(out.get), UTF_8) ===
+        """{"id":"g1"}""" + "\n" + """{"id":"g2"}""" + "\n")
+    } finally server.stop(0)
+  }
+
+  test("a body cut short fails the run: nothing published, no staging file, " +
+      "watermark kept") {
+    // a raw socket, so the response can promise more bytes than it sends
+    val server = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val responder = new Thread(() => {
+      val socket = server.accept()
+      try {
+        val in = new java.io.BufferedReader(
+          new java.io.InputStreamReader(socket.getInputStream, UTF_8))
+        while (Option(in.readLine()).exists(_.nonEmpty)) {} // the request head
+        val body = """{"id":"g1"}""" + "\n" + """{"id":"g2","""
+        socket.getOutputStream.write(("HTTP/1.1 200 OK\r\n" +
+          "Content-Type: application/x-ndjson\r\n" +
+          s"Content-Length: ${body.length + 1000}\r\n\r\n" + body).getBytes(UTF_8))
+        socket.getOutputStream.flush()
+      } finally socket.close()
+    })
+    responder.setDaemon(true)
+    responder.start()
+    try {
+      val state = tempDir
+      val raw = state.resolve("raw")
+      val ex = new Extract(state)
+      ex.run((_, _) => Iterator.single("""{"id":"g0"}"""), raw, 100L)
+      val client = new LichessClient(LichessConfig(
+        s"http://127.0.0.1:${server.getLocalPort}/api/games/user", "u", maxRetries = 0))
+      intercept[java.io.IOException](ex.run(client.fetch, raw, 200L))
+      assert(names(raw) === Seq("games_0_100.ndjson"))
+      assert(ex.loadWatermark() === Some(100L))
+    } finally server.close()
+  }
+
+  test("the raw file holds the served body's trimmed, non-blank lines, as the " +
+      "buffered client wrote them") {
+    // lines longer than the read buffer, every line-break form, blank and
+    // padded lines, multi-byte characters and no final line break
+    val long = "\"" + ("Grünfeld " * 5000) + "\""
+    val body = s"""  {"id":"a","n":$long}\r\n\n\t\n{"id":"b"}\r{"id":"c",\r"x":1}""" +
+      s"""\n   \n{"id":"d","n":$long}  """
+    val buffered = body.linesIterator.map(_.trim).filter(_.nonEmpty).mkString("", "\n", "\n")
+    withStubServer(200, body) { (url, _) =>
+      val state = tempDir
+      val out = new Extract(state).run(new LichessClient(LichessConfig(url, "u")).fetch,
+        state.resolve("raw"), 100L)
+      assert(new String(java.nio.file.Files.readAllBytes(out.get), UTF_8) === buffered)
+    }
+  }
+
+  test("an empty window publishes nothing and creates no raw directory, " +
+      "but moves the watermark") {
+    withStubServer(200, "\n  \n") { (url, _) =>
+      val state = tempDir
+      val ex = new Extract(state)
+      assert(ex.run(new LichessClient(LichessConfig(url, "u")).fetch,
+        state.resolve("raw"), 100L) === None)
+      assert(!java.nio.file.Files.exists(state.resolve("raw")))
+      assert(ex.loadWatermark() === Some(100L))
+      assert(names(state) === Seq("last_timestamp.txt"))
+    }
   }
 }

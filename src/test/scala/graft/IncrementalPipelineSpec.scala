@@ -6,14 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** End-to-end incremental chess pipeline (R4/R11 via AvailableNow) and
   * the R12 config loader.
   */
-class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
+class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   import IncrementalPipelineSpec.game
 
   test("streaming pipeline processes each raw file exactly once (R4/R11)") {
-    val raw = java.nio.file.Files.createTempDirectory("chess_raw")
-    val out = java.nio.file.Files.createTempDirectory("chess_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("chess_ckpt").toString
+    val raw = freshDir("chess_raw")
+    val out = freshDir("chess_out").toString
+    val ckpt = freshDir("chess_ckpt").toString
 
     def countGames(): Long =
       spark.read.text(out).filter("value like '[Game ID%'").count()
@@ -42,9 +42,9 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a second runStream on the session, over a new raw file, compiles no code") {
-    val raw = java.nio.file.Files.createTempDirectory("chess_raw")
-    val out = java.nio.file.Files.createTempDirectory("chess_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("chess_ckpt").toString
+    val raw = freshDir("chess_raw")
+    val out = freshDir("chess_out").toString
+    val ckpt = freshDir("chess_ckpt").toString
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -60,7 +60,7 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("EtlConfig parses the reference's yaml shape (R12)") {
-    val f = java.nio.file.Files.createTempFile("etl", ".yml")
+    val f = freshDir("etl").resolve("etl.yml")
     java.nio.file.Files.write(f,
       """# spark config
         |master: local[2]

@@ -8,7 +8,6 @@ import graft.streaming.LocalCheckpointFiles
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -17,11 +16,8 @@ import scala.jdk.CollectionConverters._
   * replaces a file, and checkpoints either manager wrote read back
   * through the other.
   */
-class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
+class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
-  private lazy val root = Files.createTempDirectory("graft_ckpt_files")
-  override def afterAll(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-  private def tmp(name: String): JPath = Files.createTempDirectory(root, name)
 
   private def ours(dir: JPath) = new LocalCheckpointFiles(new Path(dir.toUri), new Configuration())
   private def sparkDefault(dir: JPath) = CheckpointFileManager.create(new Path(dir.toUri), new Configuration())
@@ -40,7 +36,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with Befor
   }
 
   test("an interrupted write is invisible, and cancelling it leaves nothing behind") {
-    val dir = tmp("ckpt")
+    val dir = freshDir("ckpt")
     val target = dir.resolve("offsets").resolve("0")
     val out = ours(dir).createAtomic(new Path(target.toUri), false)
     out.write("v1\n{}".getBytes(UTF_8))
@@ -53,7 +49,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with Befor
   }
 
   test("a no-overwrite write onto an existing file throws and changes nothing") {
-    val dir = tmp("ckpt")
+    val dir = freshDir("ckpt")
     val target = dir.resolve("0")
     val fm = ours(dir)
     write(fm, target, "first", overwrite = false)
@@ -66,7 +62,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with Befor
   }
 
   test("a file Spark's default manager wrote with a .crc is replaced and reads back through both") {
-    val dir = tmp("ckpt")
+    val dir = freshDir("ckpt")
     val target = dir.resolve("1.delta")
     write(sparkDefault(dir), target, "old", overwrite = true)
     assert(names(dir) === Set("1.delta", ".1.delta.crc"))
@@ -81,9 +77,9 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with SparkTestBase with Befor
 
   test("a checkpoint Spark's default manager started is continued exactly once") {
     import IncrementalPipelineSpec.game
-    val raw = tmp("raw")
-    val out = tmp("out").toString
-    val ckpt = tmp("ckpt")
+    val raw = freshDir("raw")
+    val out = freshDir("out").toString
+    val ckpt = freshDir("ckpt")
     def gameIds(): Seq[String] = {
       import spark.implicits._
       spark.read.format("pgn").load(out).select("game_id").as[String].collect().toSeq.sorted
