@@ -1,7 +1,6 @@
 package graft
 
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query timed at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (BENCH_r{N}.json).
@@ -159,8 +158,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Diag.benchSfDir
+    val cpus = Diag.cpus("32")
     val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // 480 (was 390): at 275 entries warmup (~244 s quiet) + one steady
     // pass (~194 s) no longer fit 390, so both the r17 32-core AND
@@ -185,12 +184,7 @@ object Bench {
       }
     }))
 
-    val spark = Tuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Diag.session(cpus)
 
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean

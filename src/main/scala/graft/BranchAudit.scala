@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import java.nio.file.{Files, Paths}
+import Diag.jsonString
 
 /** MECHANICAL BRANCH-LIVENESS AUDIT (VERDICT r13 item 9): the w16 slip
   * — a `coalesce(new_users, 0)` gap arm that never fired at any fixture
@@ -28,7 +29,7 @@ import java.nio.file.{Files, Paths}
   * aggregate result inline) are reported as `skipped` rather than
   * silently ignored — no silent caps.
   *
-  * Usage: runMain graft.BranchAudit <sfDir> <outJson> [entry ...]
+  * Usage: runMain graft.Diag branch-audit <sfDir> <outJson> [entry ...]
   * Exit: prints a summary line; the JSON carries per-arm rows. The
   * round artifact is BRANCHES_r{N}.json.
   */
@@ -423,26 +424,8 @@ object BranchAudit {
     (out.toSeq, skipped.toSeq)
   }
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outJson = args(1)
-    val only = args.drop(2).toSet
-    val spark = Tuning(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Audit `only` (every entry when empty) at `sfDir` into `outJson`. */
+  def run(spark: SparkSession, sfDir: String, outJson: String, only: Set[String]): Unit = {
 
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.isEmpty || only(kv._1))
@@ -495,22 +478,21 @@ object BranchAudit {
             if (hits > 0) "live"
             else allowlisted(name, s.exprSql)
               .map(r => s"allowlisted: $r").getOrElse { deadCount += 1; "DEAD" }
-          s"""{"node": ${q(s.node)}, "expr": ${q(s.exprSql.take(160))}, """ +
-            s""""arm": ${q(armName)}, "hits": $hits, "status": ${q(status)}}"""
+          s"""{"node": ${jsonString(s.node)}, "expr": ${jsonString(s.exprSql.take(160))}, """ +
+            s""""arm": ${jsonString(armName)}, "hits": $hits, "status": ${jsonString(status)}}"""
         }
         val skJson = (skipped ++ evalSkipped).map { case (sql, why) =>
-          s"""{"expr": ${q(sql)}, "why": ${q(why)}}""" }
-        results += s"${q(name)}: {\"arms\": [${armJson.mkString(",")}], " +
+          s"""{"expr": ${jsonString(sql)}, "why": ${jsonString(why)}}""" }
+        results += s"${jsonString(name)}: {\"arms\": [${armJson.mkString(",")}], " +
           s"\"skipped\": [${skJson.mkString(",")}]}"
       } catch {
         case t: Throwable =>
-          results += s"${q(name)}: {\"error\": ${q(String.valueOf(t.getMessage).take(200))}}"
+          results += s"${jsonString(name)}: {\"error\": ${jsonString(String.valueOf(t.getMessage).take(200))}}"
       }
     }
     val body = s"{\n${results.mkString(",\n")},\n" +
       s""""_summary": {"entries": ${entries.size}, "sites": $siteCount, "dead": $deadCount}}"""
     Files.writeString(Paths.get(outJson), body)
     println(s"BRANCH AUDIT: ${entries.size} entries, $siteCount sites, $deadCount DEAD arms -> $outJson")
-    spark.stop()
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
-/** Parallel-capacity canary (r18 host-degradation forensics), plus a
-  * dev probe main. The canary is a fixed CPU workload — work-stealing
-  * chunks of xorshift iterations drained by a persistent pool of worker
-  * threads — whose wall time is inversely proportional to the
-  * machine-wide cycle capacity actually granted to this guest. A
+/** Parallel-capacity canary (r18 host-degradation forensics): a fixed
+  * CPU workload — work-stealing chunks of xorshift iterations drained by
+  * a persistent pool of worker threads — whose wall time is inversely
+  * proportional to the machine-wide cycle capacity actually granted to
+  * this guest. A
   * healthy quiet host reads a stable floor (~9-15 ms at 32 threads
   * here); a host-level theft episode — which inflates Spark stages 3-8x
   * with thread CPU time inflated ALONGSIDE wall, while staying
@@ -13,9 +13,8 @@ package graft
   * OPTIMIZATION_r18.md) — reads 2.5-5x the floor for its whole
   * duration, with occasional single-sample spikes to 20-65x. [[Bench]]
   * samples it between query measurements (Spark idle at the boundary,
-  * so the bench's own load cannot contaminate the reading).
-  *
-  * Probe usage: runMain graft.CanaryProbe [samples=150] [intervalMs=100] [threads=32]
+  * so the bench's own load cannot contaminate the reading), and
+  * [[ProfileQuery]] before each round.
   */
 object CanaryProbe {
   // one chunk: 2M xorshift64 steps (~2 ms on one healthy core)
@@ -59,26 +58,5 @@ object CanaryProbe {
       (System.nanoTime() - t0) / 1e9
     }
     def shutdown(): Unit = { stop = true; start.arriveAndAwaitAdvance() }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toInt else 150
-    val interval = if (args.length > 1) args(1).toLong else 100L
-    val threads = if (args.length > 2) args(2).toInt else 32
-    val chunks = threads * 2
-    spin(Spin * 4) // JIT the loop
-    val c = new Canary(threads, chunks)
-    c.sample(); c.sample() // warm the path
-    val xs = Array.fill(n) { val v = c.sample(); Thread.sleep(interval); v }
-    xs.grouped(30).zipWithIndex.foreach { case (g, i) =>
-      println(f"[canarytl] w$i%02d min=${g.min}%6.4f p50=${g.sorted.apply(g.length / 2)}%6.4f max=${g.max}%6.4f")
-    }
-    val s = xs.sorted
-    def pct(p: Double) = s(((s.length - 1) * p).toInt)
-    println(f"[canary] threads=$threads chunks=$chunks n=$n min=${s.head}%6.4f " +
-      f"p10=${pct(0.1)}%6.4f p50=${pct(0.5)}%6.4f p90=${pct(0.9)}%6.4f " +
-      f"p99=${pct(0.99)}%6.4f max=${s.last}%6.4f")
-    println("[canary] worst 10: " + s.takeRight(10).map(v => f"$v%5.3f").mkString(" "))
-    c.shutdown()
   }
 }

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dumps `explain("formatted")` for the headline queries to PLANS.md —
-  * the plan-quality evidence trail (pushed filters, pruned read schemas,
-  * broadcast joins, partial aggregation, AQE nodes). Regenerate with:
-  * `sbt "runMain graft.PlanDump"`.
+/** `explain("formatted")` dumps behind `graft.Diag plans`: PLANS.md for
+  * the headline queries — the plan-quality evidence trail (pushed
+  * filters, pruned read schemas, broadcast joins, partial aggregation,
+  * AQE nodes) — and per-query plan files for the optimization rounds.
+  * Regenerate PLANS.md with `sbt "runMain graft.Diag plans"`.
   */
 object PlanDump {
   private val headline = Seq(
@@ -67,39 +68,43 @@ object PlanDump {
     "m40_compact_commit", "m40b_compact_zorder", "f23_zorder",
     "m41_commit_log_checkpoint", "sql25_maintenance_sql", "f23b_zorder_n")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = Tuning(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** A query's physical plan, explain("formatted"). */
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  /** PLANS.md in the working directory: every headline query at `sfDir`. */
+  def dump(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at `$sfDir`. The properties\n")
+    sb.append(s"Generated by `graft.Diag plans` at `$sfDir`. The properties\n")
     sb.append("asserted mechanically in `PlanSpec` are visible here: pushed\n")
     sb.append("filters and pruned `ReadSchema` on scans, broadcast joins for\n")
     sb.append("dimensions, partial+final HashAggregate pairs, and\n")
     sb.append("TakeOrderedAndProject for top-k.\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$formatted```\n")
+      sb.append(s"\n## $name\n\n```\n${formatted(SparkEntry.queries(name)(spark, sfDir))}```\n")
     }
     // The l4 registry entry routes through the corpus-size gate, so at
     // fixture scale the dump above shows the broadcast kernel; the plan
     // that runs at 100 TB is the cell-pruned join — show it too.
-    locally {
-      val df = operators.Similarity
-        .cellThresholdJoin(Tables.embeddings(spark, sfDir), 0.45)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## l4_cosine_threshold (forced cell path — the at-scale plan)\n\n```\n$formatted```\n")
-    }
+    val cell = operators.Similarity
+      .cellThresholdJoin(Tables.embeddings(spark, sfDir), 0.45)
+    sb.append(s"\n## l4_cosine_threshold (forced cell path — the at-scale plan)\n\n```\n${formatted(cell)}```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} plans)")
-    spark.stop()
+  }
+
+  /** `<outDir>/<name>_<suffix>.txt` per query at [[Diag.benchSfDir]] —
+    * the before/after plan trail for `plans/r{N}/`, generated at the
+    * bench scale factor and core count (claims are checked against
+    * these files, not against PLANS.md's local[4] snapshot). */
+  def snap(spark: SparkSession, outDir: String, suffix: String, names: Seq[String]): Unit = {
+    val sfDir = Diag.benchSfDir
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
+        formatted(SparkEntry.queries(name)(spark, sfDir)))
+      println(s"wrote $outDir/${name}_$suffix.txt")
+    }
   }
 }

@@ -6,19 +6,11 @@ import org.apache.spark.sql.SparkSession
   * sf0.1 — tasks, run/cpu/GC millis, max task, shuffle bytes — the
   * instrumentation that found the cold-cache broadcast races and the
   * fixed per-task closure-deserialization cost (see ShingleHash's doc).
-  * Usage: runMain graft.ProfileQuery <queryName> [rounds=5]
+  * Usage: runMain graft.Diag profile-query [queryName] [rounds=5]
   */
 object ProfileQuery {
-  def main(args: Array[String]): Unit = {
-    val name = if (args.nonEmpty) args(0) else "l2c_shingle_jaccard"
-    val rounds = if (args.length > 1) args(1).toInt else 5
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Tuning(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val s = spark
+  def run(s: SparkSession, name: String, rounds: Int): Unit = {
+    val d = Diag.benchSfDir
 
     val taskMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -39,25 +31,16 @@ object ProfileQuery {
 
     // Host-health canaries (r18 j17-bimodality forensics): fixed CPU
     // work whose wall time is constant on a healthy host. canary1 =
-    // one thread; canary32 = all 32 cores of the same loop. If a slow
-    // query round coincides with inflated canaries, the host itself is
-    // degraded (hypervisor-level cycle theft — invisible to /proc/stat
-    // steal, ext-CPU and io-pressure stamps alike); if canaries stay
-    // flat while the round is slow, the cause is in-JVM state.
-    def spin(n: Long): Long = {
-      var h = 0x9E3779B97F4A7C15L; var i = 0L
-      while (i < n) { h ^= h << 13; h ^= h >>> 7; h ^= h << 17; i += 1 }
-      h
-    }
-    spin(50000000L) // JIT the loop before timing it
-    def canary(threads: Int): Double = {
-      val t0 = System.nanoTime()
-      val ts = (1 to threads).map { _ =>
-        val t = new Thread(() => { spin(50000000L); () }); t.start(); t
-      }
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    // one thread; canary32 = all 32 cores, each the same 50 M steps
+    // (25 chunks). If a slow query round coincides with inflated
+    // canaries, the host itself is degraded (hypervisor-level cycle
+    // theft — invisible to /proc/stat steal, ext-CPU and io-pressure
+    // stamps alike); if canaries stay flat while the round is slow, the
+    // cause is in-JVM state.
+    import CanaryProbe.{Canary, Spin, spin}
+    spin(Spin * 25) // JIT the loop before timing it
+    val canary1 = new Canary(1, 25)
+    val canary32 = new Canary(32, 32 * 25)
     // Continuous background canary: one fixed 10 M-iteration spin every
     // ~100 ms, worst sample per window printed with wall-clock stamps —
     // catches a mid-round host burst or a JVM-global pause (GC,
@@ -66,7 +49,7 @@ object ProfileQuery {
     val bg = new Thread(() => {
       while (true) {
         val t0 = System.nanoTime()
-        spin(10000000L)
+        spin(Spin * 5)
         val dt = (System.nanoTime() - t0) / 1e9
         if (dt > bgWorst) bgWorst = dt
         Thread.sleep(80)
@@ -77,7 +60,7 @@ object ProfileQuery {
     for (round <- 1 to rounds) {
       s.catalog.clearCache(); System.gc(); Thread.sleep(500)
       println(s"=== $name round $round ===")
-      val c1 = canary(1); val c32 = canary(32)
+      val c1 = canary1.sample(); val c32 = canary32.sample()
       bgWorst = 0.0
       println(f"[canary] 1t ${c1}%6.3f s  32t ${c32}%6.3f s  @${System.currentTimeMillis}")
       val t0 = System.nanoTime()
@@ -90,6 +73,6 @@ object ProfileQuery {
       println(f"[prof] build ${(t1 - t0) / 1e9}%6.3f s  plan ${(t2 - t1) / 1e9}%6.3f s  exec ${(t3 - t2) / 1e9}%6.3f s  FULL ${(t3 - t0) / 1e9}%7.3f s  bgWorst ${bgWorst}%6.3f s  @${System.currentTimeMillis}")
       Thread.sleep(400)
     }
-    spark.stop()
+    canary1.shutdown(); canary32.shutdown()
   }
 }

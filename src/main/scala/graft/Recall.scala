@@ -6,27 +6,14 @@ import org.apache.spark.sql.functions._
 /** Recall artifact for the approximate-similarity entries (VERDICT r2
   * stretch #8): the l3b/l3c/l3d queries are declared rows-only in the
   * driver's correctness gate (no SQL oracle can express them), so this
-  * main makes their QUALITY machine-checkable per round — recall@k of
+  * artifact makes their QUALITY machine-checkable per round — recall@k of
   * each ANN variant against the exact brute-force top-k over the same
   * embeddings, exactly as SimilaritySpec/PqSpec pin it, but emitted as
   * a JSON artifact (RECALL_r{N}.json) instead of a pass/fail assert.
   *
-  *   sbt "runMain graft.Recall /root/testdata/sf0.01 RECALL_r03.json"
+  *   sbt "runMain graft.Diag recall /root/testdata/sf0.01 RECALL_r03.json"
   */
 object Recall {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.drop(1).headOption.getOrElse("RECALL.json")
-    val spark = Tuning(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, sfDir, out)
-    spark.stop()
-  }
-
   /** Compute the recall artifact on an existing session (shared with
     * [[Verify.dump]], which regenerates it every driver round). */
   def run(spark: SparkSession, sfDir: String, out: String): Unit = {

@@ -39,7 +39,7 @@ import org.apache.spark.sql.SparkSession
   * asserted with NO exclusion: the hot user's ~1.4k distinct time
   * buckets must hash-spread across the real partition count.
   *
-  * Usage: sbt "runMain graft.SkewCheck [fixtureDir] [outFile]"
+  * Usage: sbt "runMain graft.Diag skew-check [fixtureDir] [outFile]"
   */
 object SkewCheck {
 
@@ -76,16 +76,9 @@ object SkewCheck {
   private case class Run(key: String, query: String,
       confs: Map[String, String] = Map.empty)
 
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/tmp/graft_skew")
-    val out = if (args.length > 1) args(1) else "SKEW_r10.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Run every headline query over the fixture in `dir`, write the
+    * artifact to `out`, return whether no stage violated. */
+  def run(spark: SparkSession, dir: String, out: String): Boolean = {
 
     // task durations per stage, snapshotted between queries
     val durations = new scala.collection.concurrent.TrieMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
@@ -231,7 +224,6 @@ object SkewCheck {
       s""""queries":{${entries.mkString(",")}},"pass":$allPass}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(json)
-    spark.stop()
-    if (!allPass) sys.exit(1)
+    allPass
   }
 }

@@ -9,12 +9,12 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming round artifact (VERDICT r3 stretch #8): the T1–T10 family
   * is spec-only in the driver's correctness gate (no SQL oracle can
-  * express a MemoryStream scenario), so this main re-runs each spec
+  * express a MemoryStream scenario), so this check re-runs each spec
   * scenario end-to-end and emits STREAM_r{N}.json — per-scenario pass,
   * rows emitted, micro-batches run, replay-gate hits — the same way
   * RECALL_r{N}.json makes the ANN quality machine-checkable.
   *
-  *   sbt "runMain graft.StreamCheck STREAM_r04.json"
+  *   sbt "runMain graft.Diag stream-check STREAM_r04.json"
   *
   * Scenarios mirror StreamingSpec verbatim (same inputs, same expected
   * outputs); a scenario is `ok` iff the spec's assertion holds here.
@@ -30,19 +30,6 @@ object StreamCheck {
 
   /** One scenario result: pass flag + counters for the artifact. */
   private case class Res(ok: Boolean, rows: Long, batches: Long)
-
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("STREAM.json")
-    val spark = Tuning(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val allPassed = check(spark, out)
-    spark.stop()
-    if (!allPassed) sys.exit(1)
-  }
 
   /** Run every scenario on an existing session (shared with
     * [[Verify.dump]], which regenerates the artifact every driver

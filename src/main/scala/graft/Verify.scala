@@ -2,29 +2,37 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name...]
+  *
+  * With names it dumps only those queries and their subset
+  * oracle_sql.json (the fast inner loop; it overwrites a full dump's
+  * map), writes no RECALL/STREAM artifacts, and exits 1 when one of them
+  * threw. Local width: `SPARK_GRAFT_CPUS` (default 8) for the full dump,
+  * 8 for a subset.
+  */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Tuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    dump(spark, sfDir, outDir)
-    spark.stop()
-  }
+  val cmd: Diag.Cmd = Diag.Cmd("verify",
+    "runMain graft.Verify <sfDir> <outDir> [name...]",
+    _.length >= 2, a => if (a.length > 2) "8" else Diag.cpus("8"), (spark, a) => {
+      val names = a.drop(2).toSet
+      val failed = dump(spark, a(0), a(1), names)
+      if (names.nonEmpty && failed.nonEmpty) 1 else 0
+    }, queries = _.drop(2))
 
-  /** Dump every query result + oracle_sql.json into `outDir`; returns the
-    * names whose query threw (the driver's compare then reports them as
-    * NO_OUTPUT). Shared by [[main]] and the local OracleParitySpec gate.
+  def main(args: Array[String]): Unit = Diag.launch(Diag.check(cmd, args.toSeq))
+
+  /** Dump the results of `names` (every query when empty) + their
+    * oracle_sql.json into `outDir`; returns the names whose query threw
+    * (the driver's compare then reports them as NO_OUTPUT). Shared by
+    * [[main]] and the local OracleParitySpec gate.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-      artifacts: Boolean = true): Seq[String] = {
+      names: Set[String] = Set.empty, artifacts: Boolean = true): Seq[String] = {
+    def wanted(name: String): Boolean = names.isEmpty || names(name)
     new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+    val failed = SparkEntry.queries.toSeq.filter(kv => wanted(kv._1)).flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -34,20 +42,9 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
+      .map { case (k, v) => s"${Diag.jsonString(k)}: ${Diag.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // Per-round quality artifacts (VERDICT r7 missing #2): the driver
@@ -57,7 +54,7 @@ object Verify {
     // the gate artifacts and individually fenced — an artifact failure
     // must never cost correctness entries. Opt out with
     // SPARK_GRAFT_SKIP_ARTIFACTS=1 (e.g. spec runs).
-    if (artifacts && !sys.env.contains("SPARK_GRAFT_SKIP_ARTIFACTS") &&
+    if (artifacts && names.isEmpty && !sys.env.contains("SPARK_GRAFT_SKIP_ARTIFACTS") &&
         failed.isEmpty) {
       val tag = roundTag()
       try Recall.run(spark, sfDir, s"RECALL_$tag.json")

@@ -438,8 +438,7 @@ object Joins {
       val (li, od, cu) = (s"j17_li_$tag", s"j17_od_$tag", s"j17_cu_$tag")
       def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
         s.sql(s"DROP TABLE IF EXISTS $name")
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"), s"graft_$name").toString
+        val path = Tables.scratch(s"graft_$name")
         df.write.mode("overwrite").option("path", path).saveAsTable(name)
       }
       // The three save→ANALYZE chains are mutually independent (each

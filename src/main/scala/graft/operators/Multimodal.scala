@@ -116,8 +116,7 @@ object Multimodal {
     // the payload against the source-of-truth table via the oracle.
     "l8e_multimodal_binaryfile" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_l8e_assets_$tag")
+      val dir = java.nio.file.Paths.get(Tables.scratch(s"graft_l8e_assets_$tag"))
       java.nio.file.Files.createDirectories(dir)
       dir.toFile.listFiles((_, n) => n.endsWith(".bin")).foreach(_.delete())
       val dirStr = dir.toString

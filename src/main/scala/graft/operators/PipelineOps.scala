@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.Tables.Q
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -371,21 +372,6 @@ object PipelineOps {
     ranks.select(col("id").as("node_id"), col("r").as("score"))
   }
 
-  /** Recursive local delete — snapshot entries reset their fixture
-    * table (data AND `_graft_commits` history) before re-building it.
-    * (r17: `atomicCommitFile`, the snapshot family's private OCC
-    * arbiter, is retired — every snapshot commit now goes through
-    * [[graft.plans.TableCommit]]'s reserve/publish, the same protocol
-    * as the DML writers; see [[graft.plans.SnapshotTable]].)
-    */
-  private def rmDir(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
-  }
-
   val queries: Map[String, Q] = Map(
     // M1: sessionization — split each user's event stream at >30-min
     // gaps; one lag + one running sum + one aggregate, all inside a
@@ -641,10 +627,8 @@ object PipelineOps {
     // collapses, values identical); at 100 TB the same arithmetic yields
     // ~800k 128 MB files.
     "m7_compact" -> ((s, d) => {
-      val frag = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_m7_fragmented").toString
-      val compact = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_m7_compacted").toString
+      val frag = Tables.scratch("graft_m7_fragmented")
+      val compact = Tables.scratch("graft_m7_compacted")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       ev.repartition(32).write.mode("overwrite").parquet(frag)
@@ -686,8 +670,7 @@ object PipelineOps {
     // of the release by recomputing exactly this frame.
     "m31_release_manifest" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val rel = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m31_release_$tag").toString
+      val rel = Tables.scratch(s"graft_m31_release_$tag")
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("text"),
           col("n_chars"))
@@ -720,9 +703,8 @@ object PipelineOps {
     // skipped like any other).
     "m32_time_travel" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m32_table_$tag").toString
-      rmDir(dir)
+      val dir = Tables.scratch(s"graft_m32_table_$tag")
+      FileUtils.deleteQuietly(new java.io.File(dir))
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -759,9 +741,8 @@ object PipelineOps {
     // table. Downstream incremental aggregation over this feed is m34.
     "m33_table_changes" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m33_table_$tag").toString
-      rmDir(dir)
+      val dir = Tables.scratch(s"graft_m33_table_$tag")
+      FileUtils.deleteQuietly(new java.io.File(dir))
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -799,8 +780,7 @@ object PipelineOps {
     // incremental view maintenance.
     "m34_incremental_agg" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val view = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m34_view_$tag").toString
+      val view = Tables.scratch(s"graft_m34_view_$tag")
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"), col("o_orderpriority"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -836,8 +816,7 @@ object PipelineOps {
     // metadata — never a rescan of the live table.
     "m35_write_audit_publish" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val stage = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m35_stage_$tag").toString
+      val stage = Tables.scratch(s"graft_m35_stage_$tag")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
       val batchA = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
@@ -884,9 +863,8 @@ object PipelineOps {
     // arithmetic + deletes — metadata-sized at any table size.
     "m37_snapshot_expire" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m37_table_$tag").toString
-      rmDir(dir)
+      val dir = Tables.scratch(s"graft_m37_table_$tag")
+      FileUtils.deleteQuietly(new java.io.File(dir))
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -934,13 +912,8 @@ object PipelineOps {
     // create, exactly as table formats do it.
     "m39_multi_table_commit" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m39_$tag").toString
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
+      val base = Tables.scratch(s"graft_m39_$tag")
+      FileUtils.deleteQuietly(new java.io.File(base))
       val orders = Tables.orders(s, d).select(
         col("o_custkey"), year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -1008,9 +981,8 @@ object PipelineOps {
     // concerns, exactly as in a real table format.
     "m38_snapshot_rollback" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m38_table_$tag").toString
-      rmDir(dir)
+      val dir = Tables.scratch(s"graft_m38_table_$tag")
+      FileUtils.deleteQuietly(new java.io.File(dir))
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -1083,10 +1055,9 @@ object PipelineOps {
       SqlFrontend.registerViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"m40_bal_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      rmDir(path)
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -1117,10 +1088,9 @@ object PipelineOps {
       SqlFrontend.registerViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"m40b_bal_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      rmDir(path)
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT /*+ REPARTITION(12) */ o_custkey AS custkey, COUNT(*) AS n,
@@ -1157,10 +1127,9 @@ object PipelineOps {
       SqlFrontend.registerViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"m41_bal_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      rmDir(path)
+      FileUtils.deleteQuietly(new java.io.File(path))
       new java.io.File(path).mkdirs()
       s.sql(
         s"""CREATE TABLE $tbl (custkey BIGINT, n BIGINT, cents BIGINT,
@@ -1194,8 +1163,7 @@ object PipelineOps {
 
     "m28_vacuum" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m28_table_$tag").toString
+      val dir = Tables.scratch(s"graft_m28_table_$tag")
       vacuumed(Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value")), dir)
         .agg(count(lit(1)).as("n"),
@@ -1532,8 +1500,7 @@ object PipelineOps {
     // (engine-neutral).
     "m23_incremental_rollup" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val snap = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m23_rollup_$tag").toString
+      val snap = Tables.scratch(s"graft_m23_rollup_$tag")
       val ev = Tables.events(s, d)
       val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       incrementalRollup(ev, maxUs - 7L * 86400000000L, snap)
@@ -1577,8 +1544,7 @@ object PipelineOps {
     // both engines.
     "m25_partition_overwrite" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m25_pow_$tag").toString
+      val path = Tables.scratch(s"graft_m25_pow_$tag")
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("value"), expr("unix_micros(ts) div 86400000000").as("day_no"))
       ev.write.mode("overwrite").partitionBy("day_no").parquet(path)
@@ -1627,8 +1593,7 @@ object PipelineOps {
     // never table-sized.
     "m27_quarantine_route" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val qpath = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m27_quar_$tag").toString
+      val qpath = Tables.scratch(s"graft_m27_quar_$tag")
       // 'error' events are untrusted telemetry, not product events — so
       // the TYPE route fires on real fixture rows (the r14 branch audit
       // caught the previous allowed-list covering the whole enum, which
@@ -1671,8 +1636,7 @@ object PipelineOps {
     // bytes a linear layout reads.
     "m14_zorder_layout" -> ((s, d) => {
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_m14_zorder_$tag").toString
+      val out = Tables.scratch(s"graft_m14_zorder_$tag")
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("value"))
       val (u0, u1, t0, t1) = dimBounds(ev, "user_id", "ts_us")

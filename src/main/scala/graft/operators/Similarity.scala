@@ -802,9 +802,9 @@ object Similarity {
     * sf0.01, recall@3): one 12-bit table ≈ 0.004 (rounds 1-2 — a
     * candidate FILTER, not a search structure); 16×8 multi-table 0.30
     * (round 3); + 2-flip multiprobe 0.70 (round 4); 32 tables × 3 flips
-    * reaches 0.98 (round 5 default — the full dial sweep is
-    * graft.RecallTune; 16×8×4-flip hits 0.97 at ~2.6× the candidate
-    * volume, so more tables beat more flips here). Quality gates live in
+    * reaches 0.98 (round 5 default; in the measured dial sweep
+    * 16×8×4-flip hits 0.97 at ~2.6× the candidate volume, so more
+    * tables beat more flips here). Quality gates live in
     * SimilaritySpec (pinned floor) and RECALL_r{N}.json.
     *
     * Scale shape: candidate generation is an equi-shuffle on
@@ -836,10 +836,10 @@ object Similarity {
       // the sf0.1 corpus's true 2000, crossing the 512-bucket boundary
       // (bits 9→10, 2/bucket) and dropping LSH recall@3 0.949→0.851;
       // /512 restores the documented direction on every fixture shape
-      // (sf0.01→bits 8, sf0.1→9, sf1→12 — the RecallTune sweeps below).
+      // (sf0.01→bits 8, sf0.1→9, sf1→12 — the measured sweeps below).
       val st = embeddings.queryExecution.optimizedPlan.stats
       val n = st.rowCount.map(_.toLong).getOrElse(st.sizeInBytes.toLong / 512L)
-      // ~4 vectors/bucket — the point the RecallTune sweeps support on
+      // ~4 vectors/bucket — the point the measured recall sweeps support on
       // BOTH fixture shapes: recall@3 0.985 at sf0.01 (resolves to
       // bits=8), 0.949 at sf0.1 (bits=9, the hard near-orthogonal
       // corpus), 1.000 at the 20k-vector sf1 run (bits=12) where fixed
@@ -947,7 +947,7 @@ object Similarity {
     * list id, exact cosine re-ranks within the probed lists. Cost:
     * ~corpus·nprobe/nlist pair evaluations instead of corpus².
     *
-    * nprobe is the recall/cost dial (RecallTune sweep, recall@3 vs exact):
+    * nprobe is the recall/cost dial (measured sweep, recall@3 vs exact):
     * 4/16 lists → 0.62, 10/16 → 0.90, 12/16 → 0.94 at sf0.01 on the
     * fixture's near-orthogonal embeddings — a deliberately hard case
     * (no cluster structure, so the quantizer's lists carry little

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.Tables.Q
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -296,16 +297,11 @@ object SqlFrontend {
     withViews(s, d)
     val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
     val tbl = s"sql11_order_summary_$tag"
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+    val path = Tables.scratch(s"graft_$tbl")
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     // DROP leaves the external LOCATION on disk and CTAS refuses a
     // non-empty dir — idempotent re-runs must clear the layout first
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(path))
+    FileUtils.deleteQuietly(new java.io.File(path))
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -331,14 +327,9 @@ object SqlFrontend {
     withViews(s, d)
     val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
     val tbl = s"sql13_balance_$tag"
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+    val path = Tables.scratch(s"graft_$tbl")
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
+    FileUtils.deleteQuietly(new java.io.File(path))
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -368,14 +359,9 @@ object SqlFrontend {
     withViews(s, d)
     val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
     val tbl = s"${name}_balance_$tag"
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+    val path = Tables.scratch(s"graft_$tbl")
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
+    FileUtils.deleteQuietly(new java.io.File(path))
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -437,14 +423,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql25_balance_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -480,14 +461,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql23_balance_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -513,14 +489,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql24_counters_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_custkey AS custkey,
@@ -572,14 +543,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql17_nested_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_orderkey AS okey,
@@ -682,14 +648,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql20_balance_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -737,14 +698,9 @@ object SqlFrontend {
       withViews(s, d)
       val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       val tbl = s"sql21_balance_$tag"
-      val path = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_$tbl").toString
+      val path = Tables.scratch(s"graft_$tbl")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+      FileUtils.deleteQuietly(new java.io.File(path))
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS

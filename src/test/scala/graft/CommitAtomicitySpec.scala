@@ -21,14 +21,9 @@ import graft.plans.{GraftConcurrentCommitException, GraftInjectedCrash, TableCom
   * it exactly once on the new base (sql20 puts the same loop under the
   * DuckDB oracle).
   */
-class CommitAtomicitySpec extends AnyFunSuite with SparkTestBase {
+class CommitAtomicitySpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   /** Fresh 4-file catalog parquet table: k 1..100 range-packed so a
     * `k <= 10` predicate provably touches ONE file (the pruned path).
@@ -36,9 +31,8 @@ class CommitAtomicitySpec extends AnyFunSuite with SparkTestBase {
   private def freshTable(): (String, java.io.File) = {
     n += 1
     val tbl = s"commit_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     import spark.implicits._
     (1L to 100L).map(k => (k, k * 10L)).toDF("k", "v")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("k"))
@@ -250,9 +244,8 @@ class CommitAtomicitySpec extends AnyFunSuite with SparkTestBase {
   test("partitioned target: pruned-commit crash recovery preserves partition subdirs") {
     n += 1
     val tbl = s"commit_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     import spark.implicits._
     (1L to 100L).map(k => (k, k * 10L, (k % 4).toString))
       .toDF("k", "v", "p")

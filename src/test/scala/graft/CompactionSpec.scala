@@ -10,22 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * byte-identical, that a crash never tears, and that a compactor
   * racing a writer resolves through the shared OCC lock.
   */
-class CompactionSpec extends AnyFunSuite with SparkTestBase {
+class CompactionSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   /** Partitioned table: p=frag holds 8 small files, p=ok holds 1. */
   private def freshTable(): (String, String) = {
     n += 1
     val tbl = s"compact_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     import spark.implicits._
     (1L to 80L).map(k => (k, k * 10L, "frag")).toDF("k", "v", "p")
       .repartition(8)
@@ -137,9 +131,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
       "the commit") {
     n += 1
     val tbl = s"compact_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     import spark.implicits._
     // unpartitioned, 10-way fragmented, keys shuffled so the seed has
     // NO locality to inherit

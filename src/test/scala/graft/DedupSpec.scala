@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Property tests for the near-dup machinery (L2 family): planted
   * near-dups are caught, dissimilar docs are never merged.
   */
-class DedupSpec extends AnyFunSuite with SparkTestBase {
+class DedupSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def docsDF(rows: Seq[(Long, String)]) = {
     import spark.implicits._
@@ -221,7 +221,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (1 to 120).map(i => s"nav$i").mkString(" ") + " " + inner + " " +
         (200 to 320).map(i => s"foot$i").mkString(" ")
     val rows = Seq(1L -> inner, 2L -> wrapper, 3L -> unrelated)
-    val dir = java.nio.file.Files.createTempDirectory("graft_l2d_spec").toString
+    val dir = freshDir("l2d_spec").toString
     docsDF(rows).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.containmentTopK(spark, dir, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -232,7 +232,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def runL2c(rows: Seq[(Long, String)], k: Int): Seq[(Long, Long, Double)] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_l2c_spec").toString
+    val dir = freshDir("l2c_spec").toString
     docsDF(rows).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Dedup.shingleJaccardTopK(spark, dir, k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -296,7 +296,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val a = aToks.mkString(" ")
     val b = (aToks.take(11) ++ (1 to 30).map(i => s"f$i")).mkString(" ")
     val rows = Seq(1L -> a, 2L -> b, 3L -> unrelated)
-    val dir = java.nio.file.Files.createTempDirectory("graft_l2d_edge").toString
+    val dir = freshDir("l2d_edge").toString
     docsDF(rows).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.containmentTopK(spark, dir, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -362,7 +362,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // doc 5 shares nothing (survives)
     val rows = Seq(1L -> base, 2L -> nearDup, 3L -> unrelated,
       4L -> unrelated, 5L -> (300 to 340).map(i => s"q$i").mkString(" "))
-    val dir = java.nio.file.Files.createTempDirectory("graft_l2e_spec").toString
+    val dir = freshDir("l2e_spec").toString
     docsDF(rows).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.jaccardDedup(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).sorted

@@ -8,21 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * crash-between-ckpt-and-prune overlap, and the multi-key
   * last-writer-wins note fold.
   */
-class LogCheckpointSpec extends AnyFunSuite with SparkTestBase {
+class LogCheckpointSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   private def freshTable(): String = {
     n += 1
     val tbl = s"log_ckpt_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     new java.io.File(path).mkdirs()
     spark.sql(s"""CREATE TABLE $tbl (k BIGINT, v BIGINT, p STRING)
       USING parquet PARTITIONED BY (p) LOCATION '$path'""")

@@ -7,22 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * oversized ZORDER lists reject loudly, and — the load-bearing one —
   * everything else delegates to Spark's parser untouched.
   */
-class MaintenanceSqlSpec extends AnyFunSuite with SparkTestBase {
+class MaintenanceSqlSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   /** Unpartitioned 10-file table. */
   private def freshTable(): String = {
     n += 1
     val tbl = s"maint_sql_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     import spark.implicits._
     (1L to 100L).map(k => (k, k % 7)).toDF("k", "v").repartition(10)
       .write.option("path", path).saveAsTable(tbl)

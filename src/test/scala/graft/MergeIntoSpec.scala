@@ -8,20 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle can't isolate: clause precedence, partial-column INSERT,
   * NOT MATCHED BY SOURCE actions, and the cardinality guard.
   */
-class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
+class MergeIntoSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
   /** Fresh parquet catalog table with (k BIGINT, v BIGINT, tag STRING). */
   private def freshTarget(rows: Seq[(Long, Long, String)]): String = {
     n += 1
     val tbl = s"merge_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     rows.toDF("k", "v", "tag").createOrReplaceTempView("merge_seed")
     spark.sql(
@@ -180,13 +175,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
 
   test("MERGE nested-field UPDATE rebuilds the struct; siblings untouched") {
     val tbl = s"merge_spec_nested"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$path' AS " +
       "SELECT CAST(1 AS BIGINT) AS k, named_struct('f', 10L, 'g', 'keep') AS s " +
       "UNION ALL SELECT CAST(2 AS BIGINT), named_struct('f', 20L, 'g', 'also')")
@@ -207,13 +197,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
     // r17 — remove-then-append semantics: update when present, insert
     // when absent (the Hive/Iceberg map-mutation convention)
     val tbl = s"merge_spec_map"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$path' AS " +
       "SELECT k, CASE WHEN k = 3 THEN CAST(NULL AS MAP<STRING,BIGINT>) " +
       "ELSE map('x', k * 10, 'keep', k) END AS m " +
@@ -391,13 +376,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
   private def clusteredTarget(): (String, String) = {
     n += 1
     val tbl = s"merge_spec_files_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"t${k % 3}")).toDF("k", "v", "tag")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("k"))
@@ -452,13 +432,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
       "files, mints + registers a NEW partition, other partitions byte-identical") {
     n += 1
     val tbl = s"merge_spec_part_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"p${k % 3}")).toDF("k", "v", "p")
       .write.partitionBy("p").option("path", path).saveAsTable(tbl)
@@ -491,13 +466,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
       "default partition: catalog readers see the rows (ADVICE r16)") {
     n += 1
     val tbl = s"merge_spec_nullpart_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"p${k % 3}")).toDF("k", "v", "p")
       .write.partitionBy("p").option("path", path).saveAsTable(tbl)
@@ -525,13 +495,8 @@ class MergeIntoSpec extends AnyFunSuite with SparkTestBase {
       "directories, untouched partitions stay byte-identical") {
     n += 1
     val tbl = s"merge_spec_partmove_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"p${k % 3}")).toDF("k", "v", "p")
       .write.partitionBy("p").option("path", path).saveAsTable(tbl)

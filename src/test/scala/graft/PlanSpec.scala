@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * map-side, top-k never global-sorts. A plan regression here means a
   * scale regression even while results stay correct.
   */
-class PlanSpec extends AnyFunSuite with SparkTestBase {
+class PlanSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -28,7 +28,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   test("partition pruning: year filter selects one partition of S6 output") {
     import org.apache.spark.sql.functions._
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_prune_orders"
+    val out = freshPath("prune_orders")
     Tables.orders(spark, sf("sf0.001"))
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(out)
@@ -281,7 +281,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   test("M7 compaction collapses the fragmented file count") {
     graft.operators.PipelineOps.queries("m7_compact")(spark, sf("sf0.001")).collect()
     def parts(name: String): Long = java.nio.file.Files
-      .list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name))
+      .list(java.nio.file.Paths.get(Tables.scratch(name)))
       .filter(p => p.toString.endsWith(".parquet")).count()
     val (frag, compact) = (parts("graft_m7_fragmented"), parts("graft_m7_compacted"))
     assert(frag > compact, s"fragmented=$frag compacted=$compact")
@@ -541,8 +541,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // skip evidence: the 3-month manifest match is a strict subset of
     // the 16-file range-clustered layout (7 years of shipdates)
     val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-    val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_s14_lineitem_skip_$tag")
+    val out = java.nio.file.Paths.get(Tables.scratch(s"graft_s14_lineitem_skip_$tag"))
     val total = out.toFile.listFiles().count(_.getName.endsWith(".parquet"))
     val matched = graft.sources.Ingest.manifestMatches(spark, out.toString, lo, hi)
     assert(matched.nonEmpty && matched.size < total,

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recovery through the PQ pre-rank (not just the exact re-rank), and
   * recall against the exact baseline on fixture embeddings.
   */
-class PqSpec extends AnyFunSuite with SparkTestBase {
+class PqSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   test("codes are m bytes: 32x compression of a 64-float embedding") {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
@@ -161,7 +161,7 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
     assert(flat(cached) === flat(fresh))
     // dump → reload round-trip (the fresh-process read path): every
     // centroid double survives parquet bit-for-bit
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pqspec_cb"
+    val path = freshPath("pqspec_cb")
     Pq.dumpCodebook(spark, fresh, path)
     val loaded = Pq.loadCodebook(spark, path)
     assert(loaded.m === fresh.m && loaded.ksub === fresh.ksub &&

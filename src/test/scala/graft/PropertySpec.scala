@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bridge artifact isn't in the offline cache), so runs are exactly
   * reproducible.
   */
-class PropertySpec extends AnyFunSuite with SparkTestBase {
+class PropertySpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))
@@ -941,8 +941,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
 
   test("m25 dynamic overwrite rewrites ONLY the delta's partitions (file law)") {
     import spark.implicits._
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_m25_spec").toString
+    val path = freshDir("m25_spec").toString
     Seq((1L, 0L, 1.0), (2L, 1L, 2.0), (3L, 2L, 3.0), (4L, 1L, 4.0))
       .toDF("id", "day_no", "v")
       .write.mode("overwrite").partitionBy("day_no").parquet(path)
@@ -994,8 +993,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
 
   test("m28 vacuum leaves EXACTLY the manifest's files; values intact (file law)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_m28_spec").resolve("t").toString
+    val dir = freshDir("m28_spec").resolve("t").toString
     val df = (1L to 300L).map(i => (i, i % 7, i / 4.0))
       .toDF("event_id", "user_id", "value")
     val got = graft.operators.PipelineOps.vacuumed(df, dir)
@@ -1014,8 +1012,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
 
   test("m23 merged rollup ≡ cold recompute at ANY cutoff (boundary law)") {
     val events = Tables.events(spark, sf("sf0.001"))
-    val snap = java.nio.file.Files
-      .createTempDirectory("graft_m23_spec").toString
+    val snap = freshDir("m23_spec").toString
     val usBounds = events.agg(min(unix_micros(col("ts"))),
       max(unix_micros(col("ts")))).head()
     val (lo, hi) = (usBounds.getLong(0), usBounds.getLong(1))

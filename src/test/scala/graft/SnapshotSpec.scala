@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * entries' hashed aggregates cannot see directly: which files exist,
   * which are referenced, and that untouched files stay byte-identical.
   */
-class SnapshotSpec extends AnyFunSuite with SparkTestBase {
+class SnapshotSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private def tag(d: String) =
     s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
@@ -22,7 +22,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
   test("m37: the post-expire directory is exactly the retained manifest " +
       "(shared files kept, expired-only files deleted)") {
     val d = sf("sf0.001")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_m37_table_${tag(d)}"
+    val dir = Tables.scratch(s"graft_m37_table_${tag(d)}")
     PipelineOps.queries("m37_snapshot_expire")(spark, d).collect()
     // construction: v1 = 2 files (A, shared with v3), B = 2 files
     // (expired-only, must be deleted), C = 1 compacted file → the
@@ -46,7 +46,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
   test("m38: rollback hides the corrupt delta while its files remain on " +
       "disk (metadata undo, not a data rewrite)") {
     val d = sf("sf0.001")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_m38_table_${tag(d)}"
+    val dir = Tables.scratch(s"graft_m38_table_${tag(d)}")
     val out = PipelineOps.queries("m38_snapshot_rollback")(spark, d)
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     // the rolled-back read sees ONLY 1995
@@ -62,7 +62,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
   test("m39: the torn generation exists on disk but no commit names it — " +
       "the reader serves the last committed version of BOTH tables") {
     val d = sf("sf0.001")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_m39_${tag(d)}"
+    val base = Tables.scratch(s"graft_m39_${tag(d)}")
     val out = PipelineOps.queries("m39_multi_table_commit")(spark, d).collect()
     // snapshot consistency: re-aggregated base equals stored rollup in
     // every segment (a torn or mixed read breaks one side)
@@ -86,12 +86,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
   test("m33: the appended delta never rewrites base files (byte-identical " +
       "v1 across the append)") {
     val d = sf("sf0.001")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_m33_probe"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
+    val dir = freshPath("m33_probe")
     val orders = Tables.orders(spark, d).select(
       year(col("o_orderdate")).as("yr"),
       expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -119,8 +114,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
   test("m39 commit publish: two writers racing one version — exactly one wins, " +
       "the winner's content survives byte-identical") {
     import graft.plans.{SnapshotTable, TableCommit}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_m39_race").toString
+    val dir = freshDir("m39_race").toString
     val (fs, loc) = SnapshotTable.fsOf(spark, dir)
     // writer A claims and publishes v1 (the unified TableCommit cycle)
     val vA = TableCommit.reserve(fs, loc, 0)
@@ -147,8 +141,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
       "table at the prior version with no scratch debris (r17)") {
     import graft.plans.{GraftInjectedCrash, SnapshotTable, TableCommit}
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_snap_crash").toString + "/t"
+    val dir = freshDir("snap_crash").toString + "/t"
     val snap = SnapshotTable
     val v1 = snap.commit(spark, dir,
       Some(Seq((1L, "base")).toDF("k", "who")), (_, nw) => nw)
@@ -185,8 +178,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
       "loser throws, the winner's snapshot is intact, a retry lands (r17)") {
     import graft.plans.{GraftConcurrentCommitException, SnapshotTable}
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_snap_race").toString + "/t"
+    val dir = freshDir("snap_race").toString + "/t"
     val snap = SnapshotTable
     val v1 = snap.commit(spark, dir,
       Some(Seq((1L, "base")).toDF("k", "who")), (_, nw) => nw)

@@ -10,21 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * a crash on either side of the publish point leaves exactly-once
   * data with the gate still correct.
   */
-class StreamAppendSpec extends AnyFunSuite with SparkTestBase {
+class StreamAppendSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   private def freshTable(): String = {
     n += 1
     val tbl = s"stream_append_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    rm(new java.io.File(path))
     spark.sql(s"""CREATE TABLE $tbl (k BIGINT, v BIGINT, p STRING)
       USING parquet PARTITIONED BY (p) LOCATION '$path'""")
     tbl

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * physical-type assumption that drifts out from under `Tables` fails
   * here before it fails a round.
   */
-class TablesSpec extends AnyFunSuite with SparkTestBase {
+class TablesSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
     .map(sf).filter(d => new java.io.File(d).isDirectory)
@@ -46,7 +46,7 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
     val asNanos = cur.select(col("event_id"),
       (unix_micros(col("ts")) * 1000L).as("ts"))
     assert(asNanos.schema("ts").dataType == LongType)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev_nanos").toString
+    val dir = freshDir("ev_nanos").toString
     asNanos.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val rebuilt = Tables.load(spark, dir, "events")
     assert(rebuilt.schema("ts").dataType == TimestampType)

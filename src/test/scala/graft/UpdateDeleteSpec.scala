@@ -8,20 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics the oracle can't isolate: WHERE-less forms, simultaneous
   * assignment, three-valued DELETE predicates, and rerun determinism.
   */
-class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
+class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private var n = 0
   /** Fresh parquet catalog table with (k BIGINT, v BIGINT, tag STRING). */
   private def freshTarget(rows: Seq[(Long, Long, String)]): String = {
     n += 1
     val tbl = s"dml_spec_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     rows.toDF("k", "v", "tag").createOrReplaceTempView("dml_seed")
     spark.sql(
@@ -74,13 +69,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
   private def lichessShapedTarget(): String = {
     n += 1
     val tbl = s"dml_spec_nested_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT * FROM VALUES
@@ -163,13 +153,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
     // in catalog order and the overwrite is full-table (static) — pin
     // that values land in the right columns and partitions survive
     val tbl = "dml_spec_part"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(s"""CREATE TABLE $tbl (k BIGINT, v BIGINT, tag STRING)
       |USING parquet PARTITIONED BY (tag) LOCATION '$path'""".stripMargin)
     spark.sql(s"INSERT INTO $tbl VALUES (1, 10, 'a'), (2, 20, 'a'), (3, 30, 'b')")
@@ -184,13 +169,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
 
   test("UPDATE of the partition column moves rows between partitions") {
     val tbl = "dml_spec_part_move"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(s"""CREATE TABLE $tbl (k BIGINT, v BIGINT, tag STRING)
       |USING parquet PARTITIONED BY (tag) LOCATION '$path'""".stripMargin)
     spark.sql(s"INSERT INTO $tbl VALUES (1, 10, 'a'), (2, 20, 'b')")
@@ -247,13 +227,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
   private def clusteredTarget(): (String, String) = {
     n += 1
     val tbl = s"dml_spec_files_t$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"t${k % 3}")).toDF("k", "v", "tag")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("k"))
@@ -307,13 +282,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
       "partition pruning intact") {
     n += 1
     val tbl = s"dml_spec_files_part$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"p${k % 2}")).toDF("k", "v", "tag")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("k"))
@@ -341,13 +311,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
       "rows rewrite, rows migrate, the minted partition is registered") {
     n += 1
     val tbl = s"dml_spec_files_move$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     import spark.implicits._
     (0L until 40L).map(k => (k, k * 10, s"p${k % 2}")).toDF("k", "v", "tag")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("k"))
@@ -376,13 +341,8 @@ class UpdateDeleteSpec extends AnyFunSuite with SparkTestBase {
       "NULL maps ride through (r17)") {
     n += 1
     val tbl = s"dml_spec_map$n"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$tbl"
+    val path = freshPath(tbl)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
     spark.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$path' AS " +
       "SELECT k, CASE WHEN k = 4 THEN CAST(NULL AS MAP<STRING,BIGINT>) " +
       "ELSE map('x', k * 10, 'keep', k) END AS m " +

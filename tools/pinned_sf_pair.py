@@ -2,10 +2,10 @@
 """DuckDB denominator for the pinned r10 subset at an arbitrary SF dir.
 
 BASELINE §8 sf1 pinned-table protocol (VERDICT r14 item 7): the engine
-side comes from graft.BenchSubset on the same dir; this script times the
-same queries' oracle SQL in embedded DuckDB under the §7 denominator
-protocol (5 reps, drop min/max, mean of middle 3; a first rep >= 5 s
-stands alone), so the pinned ratio gets a scale point where plan
+side comes from `runMain graft.Diag bench-subset` on the same dir; this
+script times the same queries' oracle SQL in embedded DuckDB under the §7
+denominator protocol (5 reps, drop min/max, mean of middle 3; a first
+rep >= 5 s stands alone), so the pinned ratio gets a scale point where plan
 quality, not per-job constant overhead, moves the number.
 
 Usage: pinned_sf_pair.py <sfDir> <verifyDirWithOracleJson> [out.json]

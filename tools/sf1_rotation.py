@@ -25,7 +25,8 @@ guarantee, not a per-round judgement call:
 
 CHECK MODES (the machine rule the r16 verdict asked for — prose no
 longer adjudicates these at gate time):
-- "exact"  — VerifyOne + check.py hash parity, the default.
+- "exact"  — `runMain graft.Verify <sfDir> <outDir> <name...>` + check.py
+  hash parity, the default.
 - "band:REL" — sketch entries that leave exact estimation mode at the
   sf1 fixture scale (theta sketches are exact below 4096 retained keys;
   /tmp/graft_sf1's events carry ~15k distinct users). The gate runs

@@ -16,7 +16,7 @@ scale. This writes a deliberately skewed fixture dir (default
 Remaining tables are copied from /root/testdata/sf0.1 so every
 SparkEntry query can run against the dir. Deterministic, seed=42.
 Driver-side tooling only (pyarrow/numpy); the engine never depends on
-this file. Consumed by `sbt "runMain graft.SkewCheck"` -> SKEW_r{N}.json.
+this file. Consumed by `sbt "runMain graft.Diag skew-check"` -> SKEW_r{N}.json.
 """
 import os, shutil, sys, json
 import numpy as np
