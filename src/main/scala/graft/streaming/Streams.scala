@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * Spark's file source + checkpointLocation + Trigger.AvailableNow, which
   * is the same "each file exactly once" contract but crash-safe
   * (SURVEY §2A R4/R11). Everything here is a plan fragment: callers pick
-  * source/sink/trigger; StreamingSpec drives them with MemoryStream.
+  * source/sink/trigger; the StreamCheck table drives them with
+  * MemoryStream.
   */
 object Streams {
 
@@ -451,7 +452,8 @@ object Streams {
     * (`spark.sql.streaming.stateStore.providerClass` →
     * `...state.RocksDBStateStoreProvider`) — the new operator only
     * supports RocksDB; callers set it before starting the query
-    * (StreamingSpec/StreamCheck flip it per scenario).
+    * ([[withConfs]] with [[rocksDbProvider]], as the StreamCheck table's
+    * t11 and the oracle entries' [[scenario]] runner do).
     */
   def runningStats(events: Dataset[Ev]): Dataset[UserStats] = {
     val spark = events.sparkSession
@@ -459,6 +461,22 @@ object Streams {
     events.groupByKey(_.user_id)
       .transformWithState(new RunningStats,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
+  }
+
+  /** The session conf that selects the RocksDB state-store provider. */
+  private[graft] val rocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with the session confs `confs` set, then restore each one:
+    * its prior value, or unset if it had none. */
+  private[graft] def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
   /** The rig of the oracle-graded streaming entries t22–t39, written
@@ -533,22 +551,13 @@ object Streams {
     /** Start `w`, drain it and stop it. `availableNow` runs the trigger a
       * cron-scheduled backfill uses: the query terminates by itself once
       * everything available is processed. */
-    def drain(w: DataStreamWriter[_], availableNow: Boolean = false): Unit = {
-      val confs = Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
-        (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        else Nil)
-      val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+    def drain(w: DataStreamWriter[_], availableNow: Boolean = false): Unit =
+      withConfs(s, Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
+          (if (rocksDb) Seq(rocksDbProvider) else Nil): _*) {
         val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
         try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
         finally q.stop()
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
-    }
 
     /** Drain `df` into the memory table `<tag>_final` and read it back. */
     def memory(df: DataFrame, mode: String): DataFrame = {
@@ -637,7 +646,7 @@ object Streams {
     // time-ordered, so any realistic delay would legitimately drop
     // "late" rows and parity would measure the REPLAY ORDER, not the
     // operator — bounded-state eviction under realistic watermarks is
-    // t8/t8b's StreamCheck scenario; THIS entry pins the join itself.
+    // the StreamCheck table's t8/t8b; THIS entry pins the join itself.
     scenario("t23_stream_interval_join", parts = 4) { (s, d, sc) =>
       // purchases arrive over TWO triggers (the cross-batch matching the
       // pin needs: batch-2 purchases must find batch-1 clicks in state);
@@ -745,7 +754,7 @@ object Streams {
     // must hash-equal the source events exactly once each (the copies
     // are byte-identical rows, so the final set is deterministic no
     // matter which copy a trigger sees first). No watermark: bounded-
-    // state TTL eviction is t15's StreamCheck scenario; this pins the
+    // state TTL eviction is the StreamCheck table's t15; this pins the
     // dedup itself.
     scenario("t26_stream_dedup", parts = 8) { (s, d, sc) =>
       // the duplicate copies are byte-identical rows, so the surviving

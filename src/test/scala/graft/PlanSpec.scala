@@ -176,18 +176,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    // catalog state is per-JVM but the warehouse dir persists across
-    // runs — clear stale locations or CTAS refuses to create
-    val wh = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_warehouse")
-    Seq("b_orders", "b_lineitem").foreach { t =>
-      val d = wh.resolve(t)
-      if (java.nio.file.Files.exists(d)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     Tables.orders(spark, sf("sf0.001")).write.mode("overwrite")
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("b_orders")
     Tables.lineitem(spark, sf("sf0.001")).write.mode("overwrite")
@@ -364,8 +352,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     val d = sf("sf0.01")
     val ev = Tables.events(spark, d).select(col("event_id"), col("user_id"),
       unix_micros(col("ts")).as("ts_us"), col("value"))
-    val zdir = java.nio.file.Files.createTempDirectory("plan_m14_z").toString
-    val ldir = java.nio.file.Files.createTempDirectory("plan_m14_lin").toString
+    val zdir = freshDir("plan_m14_z").toString
+    val ldir = freshDir("plan_m14_lin").toString
     graft.operators.PipelineOps.zOrderWrite(ev, "user_id", "ts_us", zdir)
     ev.repartition(16).write.mode("overwrite").parquet(ldir)
     val b = ev.agg(min(col("user_id")), max(col("user_id")),

@@ -231,7 +231,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase with TempDirs {
         .toDF("doc_id", "text")
       // run the SHIPPED entry against a scratch fixture dir so the law
       // covers the real expressions, not a copy of them
-      val dir = java.nio.file.Files.createTempDirectory(s"l25_law_$seed")
+      val dir = freshDir(s"l25_law_$seed")
       rows.withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")))
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -358,7 +358,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase with TempDirs {
     // type mismatch (Spark keeps PARTIAL results: lang survives while
     // doc_id is null). The second shape is why s12 judges validity on
     // `_corrupt_record IS NULL`, never on a data field being non-null.
-    val dir = java.nio.file.Files.createTempDirectory("prop_s12").toString
+    val dir = freshDir("prop_s12").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part.json"),
       """{"doc_id": 1, "lang": "en"}
@@ -413,7 +413,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase with TempDirs {
       val rows = sample(Gen.listOfN(10,
         Gen.zip(Gen.choose(0L, 1000L), Gen.alphaStr)), seed)
       val df = rows.toDF("id", "s")
-      val dir = java.nio.file.Files.createTempDirectory("prop_s5").toString
+      val dir = freshDir("prop_s5").toString
       df.write.mode("overwrite").json(dir)
       val back = spark.read.schema("id BIGINT, s STRING").json(dir)
       assert(back.count() === rows.length, s"seed=$seed")
@@ -460,7 +460,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase with TempDirs {
       val docs = sample(Gen.listOfN(60, Gen.zip(docGen, srcGen)), seed)
         .zipWithIndex.map { case ((t, src), i) => (i.toLong, t, "en", src,
           t.length.toLong) }
-      val dir = java.nio.file.Files.createTempDirectory("prop_m16").toString
+      val dir = freshDir("prop_m16").toString
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = graft.operators.PipelineOps

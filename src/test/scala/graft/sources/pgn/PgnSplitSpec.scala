@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * unsplit parser; the Spark layer checks the planned partition count
   * and end-to-end row equality.
   */
-class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase {
+class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase with graft.TempDirs {
 
   private def render(n: Int): String = {
     val sb = new StringBuilder
@@ -29,7 +29,7 @@ class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   private def writeTmp(text: String): String = {
-    val f = java.nio.file.Files.createTempFile("split", ".pgn")
+    val f = freshDir("split").resolve("split.pgn")
     java.nio.file.Files.write(f, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     f.toString
   }
@@ -49,7 +49,7 @@ class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("Spark read with small splitSize plans >1 partition, same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("pgn_split").toString
+    val dir = freshDir("pgn_split").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "big.pgn"), render(60))
     val whole = spark.read.format("pgn").load(dir)

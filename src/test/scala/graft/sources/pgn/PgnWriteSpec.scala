@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The numbered write's commit protocol: a job that fails after some
   * parts committed deletes those parts and leaves the directory's earlier
   * contents readable. */
-class PgnWriteSpec extends AnyFunSuite with graft.SparkTestBase {
+class PgnWriteSpec extends AnyFunSuite with graft.SparkTestBase with graft.TempDirs {
 
   test("a failed numbered write aborts its committed parts, keeping the old ones") {
-    val out = Files.createTempDirectory("pgn_abort")
+    val out = freshDir("pgn_abort")
     Files.write(out.resolve("part-00000-old.pgn"), "[Game 1]\n".getBytes)
     val dir = out.toString
     val rows = spark.sparkContext.parallelize(0 until 3, 3).mapPartitionsWithIndex { (p, _) =>
