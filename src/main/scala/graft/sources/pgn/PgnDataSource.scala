@@ -1,6 +1,10 @@
 package graft.sources.pgn
 
+import java.io.{BufferedWriter, OutputStreamWriter}
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
 import java.util
 import graft.sources.Pgn
 import org.apache.spark.TaskContext
@@ -17,16 +21,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DataSource V2 `format("pgn")` (SURVEY §4.3's optional S7 ergonomics):
   * `puzzleGames.toDF.write.format("pgn").mode("overwrite").save(dir)`.
   *
-  * Each task writes one standalone .pgn file through a temp-file +
-  * commit-rename protocol (idempotent under task retry — the committer
-  * discipline the reference's shared-append sink lacked, SURVEY §2A
-  * R10). Through `format("pgn")`, game numbering restarts per file,
-  * matching the reference's per-output-file `[Game N]` semantics without
-  * its cross-partition interleaving race. `graft.sources.Pgn.write`
+  * Each task writes one standalone .pgn file through a temp-file, fsync
+  * and commit-rename protocol (idempotent under task retry — the
+  * committer discipline the reference's shared-append sink lacked,
+  * SURVEY §2A R10), and the job commit fsyncs the directory. Through
+  * `format("pgn")`, game numbering restarts per file, matching the
+  * reference's per-output-file `[Game N]` semantics without its
+  * cross-partition interleaving race. `graft.sources.Pgn.write`
   * (`ChessPipeline.run`) drives the same writer and commit with each
   * part's start offset, so its parts carry one global numbering. Only
   * `overwrite` is supported: once every task has committed, the job
   * commit deletes everything else in the directory.
+  *
+  * `spark.read.format("pgn").load(dir)` reads the committed files back,
+  * one block at a time per partition reader (`PgnRead.scala`); it takes
+  * no read options.
   */
 class PgnDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgn"
@@ -50,10 +59,7 @@ private[pgn] class PgnTable(path: String) extends Table
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    // files above splitSize are planned as boundary-aligned byte ranges
-    // (PgnBatch.planInputPartitions); 128 MB default mirrors
-    // spark.sql.files.maxPartitionBytes
-    new PgnScanBuilder(path, options.getLong("splitSize", 128L << 20))
+    new PgnScanBuilder(path)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -97,11 +103,15 @@ private[sources] class PgnBatchWrite(path: String, writeId: String, ordinals: Ar
     * this write has committed, so a failed write leaves them readable. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val parts = committed(messages).map(_.getFileName.toString).toSet
-    val s = Files.list(Files.createDirectories(Paths.get(path)))
+    val dir = Files.createDirectories(Paths.get(path))
+    val s = Files.list(dir)
     try s.forEach { p =>
       if (!parts(p.getFileName.toString))
         org.apache.commons.io.FileUtils.forceDelete(p.toFile)
     } finally s.close()
+    // the parts' renames (and the deletes) become durable
+    val d = FileChannel.open(dir, READ)
+    try d.force(true) finally d.close()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -121,7 +131,9 @@ private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
   private val tmp = Paths.get(dir, s".$name-$taskId.tmp")
   private val dst = Paths.get(dir, name)
   Files.createDirectories(tmp.getParent)
-  private val out = Files.newBufferedWriter(tmp)
+  private val ch = FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
+  private val out =
+    new BufferedWriter(new OutputStreamWriter(Channels.newOutputStream(ch), UTF_8.newEncoder()))
   private var n = start
 
   override def write(row: InternalRow): Unit = {
@@ -130,7 +142,11 @@ private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
     out.write('\n')
   }
 
+  /** The part's bytes are fsynced before its rename publishes them;
+    * the job commit then fsyncs the directory. */
   override def commit(): WriterCommitMessage = {
+    out.flush()
+    if (n > start) ch.force(true)
     out.close()
     if (n == start) { Files.deleteIfExists(tmp); PgnCommit("") }
     else {

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * blocks no matter where the ranges cut — including cuts inside the
   * `[Game N]` marker line, inside a multibyte UTF-8 char, and at every
   * block boundary. The unit layer brute-forces split sizes against the
-  * unsplit parser; the Spark layer checks the planned partition count
-  * and end-to-end row equality.
+  * fields the file was rendered from; the Spark layer checks the planned
+  * partition count and end-to-end row equality.
   */
 class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase with graft.TempDirs {
 
@@ -34,16 +34,29 @@ class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase with graft.TempD
     f.toString
   }
 
+  /** The columns of game i that [[render]] writes, as the reader reads them. */
+  private def fields(i: Int): Seq[String] = Seq(s"game$i", s"wíte_$i", s"black$i", s"E$i",
+    s"Sicilian § $i", if (i % 2 == 0) "white" else "black",
+    s"1. e4 c5 2. Nf3 d6 ${"x" * (i % 7)}".trim)
+
+  /** The rows of bytes [start, end) of `file`. */
+  private def read(file: String, start: Long, end: Long): Seq[Seq[String]] = {
+    val r = new PgnReader(file, start, end, graft.sources.Pgn.schema)
+    val rows = Seq.newBuilder[Seq[String]]
+    try while (r.next())
+      rows += Seq.tabulate(7)(i => Option(r.get().getUTF8String(i)).map(_.toString).orNull)
+    finally r.close()
+    rows.result()
+  }
+
   test("every split size reassembles the unsplit parse exactly") {
-    val text = render(40)
-    val file = writeTmp(text)
+    val file = writeTmp(render(40))
     val size = java.nio.file.Files.size(java.nio.file.Paths.get(file))
-    val want = PgnParse.parseBlocks(text)
-    assert(want.size === 40)
+    val want = (1 to 40).map(fields)
     for (split <- Seq(1L, 2L, 3L, 5L, 7L, 16L, 37L, 100L, 333L, 1000L, size - 1, size, size + 5)) {
       val ranges = (0L until size by split)
         .map(off => (off, math.min(off + split, size)))
-      val got = ranges.flatMap { case (s, e) => PgnSplitReader.read(file, s, e) }
+      val got = ranges.flatMap { case (s, e) => read(file, s, e) }
       assert(got === want, s"splitSize=$split")
     }
   }
@@ -52,12 +65,18 @@ class PgnSplitSpec extends AnyFunSuite with graft.SparkTestBase with graft.TempD
     val dir = freshDir("pgn_split").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "big.pgn"), render(60))
-    val whole = spark.read.format("pgn").load(dir)
-    val split = spark.read.format("pgn").option("splitSize", 512L).load(dir)
-    assert(whole.rdd.getNumPartitions === 1)
-    assert(split.rdd.getNumPartitions > 1)
     val key = (r: org.apache.spark.sql.Row) => r.getString(0)
-    assert(split.collect().sortBy(key).toSeq === whole.collect().sortBy(key).toSeq)
-    assert(split.count() === 60)
+    val whole = spark.read.format("pgn").load(dir)
+    assert(whole.rdd.getNumPartitions === 1)
+    val want = whole.collect().sortBy(key).toSeq
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(conf)
+    spark.conf.set(conf, "512")
+    try {
+      val split = spark.read.format("pgn").load(dir)
+      assert(split.rdd.getNumPartitions > 1)
+      assert(split.collect().sortBy(key).toSeq === want)
+      assert(split.count() === 60)
+    } finally old.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 }
