@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.streaming.Streams
 import graft.streaming.Streams.Ev
@@ -99,15 +99,13 @@ object StreamCheck {
     Files.createDirectories(dir)
   }
 
-  /** Write feed file `name` into `dir`. Write-then-ATOMIC_MOVE: the file
-    * stream source lists the dir between micro-batches, and a non-atomic
-    * in-place write can be listed half-written — flaking the scenario
-    * counts (ADVICE r9). */
+  /** Write feed file `name` into `dir` as an [[AtomicFile]] staged as
+    * `.<name>.tmp`, which the file stream skips: it lists the dir between
+    * micro-batches, and a non-atomic in-place write can be listed
+    * half-written — flaking the scenario counts (ADVICE r9). */
   private def stage(dir: Path, name: String, lines: Seq[String]): Unit = {
-    val staging = Files.createDirectories(Paths.get(Tables.scratch("sc_stage")))
-    val tmp = Files.createTempFile(staging, name, ".tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes)
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    val f = new AtomicFile(dir.resolve(s".$name.tmp"), dir.resolve(name))
+    try { f.writer.write(lines.mkString("\n")); f.commit() } finally f.cancel()
   }
 
   /** The members of `want` that `seen` holds: for a scenario that pins

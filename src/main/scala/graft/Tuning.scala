@@ -93,13 +93,6 @@ object Tuning {
     // runtime, so one shared loader loses nothing.
     "spark.sql.artifact.isolation.enabled" -> "false")
 
-  /** Shuffle partition count: ~2 partitions per core, floor of 2× the
-    * default parallelism — at 100 TB override with (input bytes /
-    * target partition size) instead.
-    */
-  def shufflePartitions(spark: SparkSession): Int =
-    math.max(spark.sparkContext.defaultParallelism * 2, 32)
-
   def apply(builder: SparkSession.Builder): SparkSession.Builder =
     recommended.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }

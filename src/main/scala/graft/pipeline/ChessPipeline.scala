@@ -21,9 +21,7 @@ object ChessPipeline {
     target.toFile.deleteOnExit()
     val in = getClass.getResourceAsStream("/graft/lichess_sample.ndjson")
     require(in != null, "lichess_sample.ndjson missing from classpath")
-    try java.nio.file.Files.copy(in, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    finally in.close()
+    try java.nio.file.Files.write(target, in.readAllBytes()) finally in.close()
     target.toString
   }
 

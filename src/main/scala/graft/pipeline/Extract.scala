@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import java.io.{BufferedWriter, OutputStreamWriter, Writer}
-import java.nio.channels.{Channels, FileChannel}
+import java.io.Writer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
+import java.nio.file.{Files, Path, Paths}
+
+import graft.AtomicFile
 
 /** Driver-side incremental extraction (SURVEY.md §2A R1–R3).
   *
@@ -17,15 +17,15 @@ import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
   * the window — at-least-once + idempotent = effectively exactly-once
   * when the downstream consumer (the T1 file stream) dedups by file name.
   *
-  * A run streams the fetched lines into a hidden staging file in the raw
-  * directory (`.games_<since>_<until>.ndjson.tmp`; the file stream and
-  * `spark.read.json` skip dot-files), fsyncs it, renames it over
-  * `games_<since>_<until>.ndjson` in one atomic step and fsyncs the
-  * directory. That rename is the commit point: before it no reader can
-  * see any of the window, after it the window is whole and durable. The
-  * watermark is then written the same way (staging file, fsync, atomic
-  * rename), so it holds the old value or the new one, never a torn one.
-  * Memory stays one line plus the I/O buffers, whatever the window's size.
+  * A run streams the fetched lines into `games_<since>_<until>.ndjson`
+  * through an [[AtomicFile]] staged as the hidden
+  * `.games_<since>_<until>.ndjson.tmp` (the file stream and
+  * `spark.read.json` skip dot-files), then fsyncs the directory. Its
+  * rename is the commit point: before it no reader can see any of the
+  * window, after it the window is whole and durable. The watermark is
+  * then published the same way, so it holds the old value or the new
+  * one, never a torn one. Memory stays one line plus the I/O buffers,
+  * whatever the window's size.
   *
   * A run first repairs what a crashed one left: it deletes stale staging
   * files, and when the window starting at the committed watermark was
@@ -113,26 +113,11 @@ object Extract {
   /** The raw file name of a window from `since`, up to its end. */
   private def windowPrefix(since: Option[Long]): String = s"games_${since.getOrElse(0L)}_"
 
-  /** Writes `target` all or nothing, as UTF-8 text: `write` fills the
-    * hidden staging file `.<name>.tmp` beside it, which is fsynced,
-    * renamed over `target` in one atomic step, and made durable by an
-    * fsync of the directory. A failure leaves `target` as it was and
-    * deletes the staging file. */
+  /** Writes `target` all or nothing, as UTF-8 text, through an
+    * [[AtomicFile]] staged as `.<name>.tmp`, then fsyncs the directory. */
   private def writeAtomically(target: Path)(write: Writer => Unit): Unit = {
-    val dir = target.getParent
-    Files.createDirectories(dir)
-    val staging = dir.resolve(s".${target.getFileName}.tmp")
-    try {
-      val ch = FileChannel.open(staging, CREATE, WRITE, TRUNCATE_EXISTING)
-      try {
-        val out = new BufferedWriter(new OutputStreamWriter(Channels.newOutputStream(ch), UTF_8))
-        write(out)
-        out.flush()
-        ch.force(true)
-      } finally ch.close()
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      val d = FileChannel.open(dir, READ)
-      try d.force(true) finally d.close()
-    } finally Files.deleteIfExists(staging)
+    val f = new AtomicFile(target.resolveSibling(s".${target.getFileName}.tmp"), target)
+    try { write(f.writer); f.commit() } finally f.cancel()
+    AtomicFile.syncDir(target.getParent)
   }
 }

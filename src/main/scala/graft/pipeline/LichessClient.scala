@@ -7,28 +7,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.time.Duration
 
-/** Connection/request settings for the games-export REST API (reference
-  * `etl/extract.py:57-66`): endpoint + username plus the fixed query
-  * params the reference sends on every pull.
+/** Where the games-export REST API is and whose games to pull
+  * (reference `etl/extract.py:57-66`); `max` caps the games per pull.
   */
-final case class LichessConfig(
-    apiUrl: String,
-    username: String,
-    max: Int = 3,
-    perfType: String = "ultraBullet, bullet, blitz",
-    analysed: Boolean = true,
-    clocks: Boolean = true,
-    opening: Boolean = true,
-    sort: String = "dateAsc",
-    requestTimeout: Duration = Duration.ofSeconds(30),
-    /** Bounded retry budget for transient failures (429/5xx/connect):
-      * total attempts = maxRetries + 1. */
-    maxRetries: Int = 3,
-    /** Exponential backoff base (doubles per attempt) when the server
-      * sends no `Retry-After`. */
-    retryBaseMs: Long = 500,
-    /** Ceiling on any single backoff sleep. */
-    retryMaxMs: Long = 10000)
+final case class LichessConfig(apiUrl: String, username: String, max: Int = 3)
 
 object LichessConfig {
 
@@ -88,9 +70,9 @@ object LichessConfig {
   * #1 — the real export API rate-limits aggressively, and one 429 must
   * not kill a scheduled extract a short wait would save):
   *  - 429: sleeps the server's `Retry-After` seconds when present
-  *    (capped at `retryMaxMs`), else exponential backoff;
+  *    (capped at `RetryMaxMs`), else exponential backoff;
   *  - 5xx and connection-level IOException: exponential backoff
-  *    (`retryBaseMs · 2^attempt`, capped);
+  *    (`RetryBaseMs · 2^attempt`, capped);
   *  - other 4xx: immediate throw — the request itself is wrong and
   *    retrying cannot fix it.
   * Exhausted retries throw, so the watermark ordering is unchanged:
@@ -110,6 +92,7 @@ object LichessConfig {
 class LichessClient(cfg: LichessConfig,
     client: HttpClient = LichessClient.defaultClient,
     sleeper: Long => Unit = Thread.sleep(_)) {
+  import LichessClient._
 
   private def enc(s: String): String = URLEncoder.encode(s, UTF_8)
 
@@ -118,20 +101,12 @@ class LichessClient(cfg: LichessConfig,
     val params = Seq(
       since.map(s => "since" -> s.toString),
       Some("until" -> until.toString),
-      Some("max" -> cfg.max.toString),
-      Some("perfType" -> cfg.perfType),
-      Some("analysed" -> cfg.analysed.toString),
-      Some("clocks" -> cfg.clocks.toString),
-      Some("opening" -> cfg.opening.toString),
-      Some("sort" -> cfg.sort)).flatten
+      Some("max" -> cfg.max.toString)).flatten ++ FixedParams
     val qs = params.map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
     URI.create(s"${cfg.apiUrl.stripSuffix("/")}/${enc(cfg.username)}?$qs")
   }
 
-  private def backoffMs(attempt: Int): Long =
-    // clamp the shift: a large configured maxRetries (>~55) would
-    // overflow the Long shift into a garbled (possibly negative) delay
-    math.min(cfg.retryMaxMs, cfg.retryBaseMs << math.min(attempt, 20))
+  private def backoffMs(attempt: Int): Long = math.min(RetryMaxMs, RetryBaseMs << attempt)
 
   /** `Retry-After` in millis, when present and a plain numeric seconds
     * value — integer or fractional, rounded up so a "1.5" never sleeps
@@ -142,13 +117,13 @@ class LichessClient(cfg: LichessConfig,
     Option(resp.headers().firstValue("Retry-After").orElse(null))
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
       .filter(d => !d.isNaN && !d.isInfinite)
-      .map(secs => math.min(cfg.retryMaxMs,
+      .map(secs => math.min(RetryMaxMs,
         math.ceil(math.max(0.0, secs) * 1000.0).toLong))
 
   def fetch(since: Option[Long], until: Long): Iterator[String] = {
     val req = HttpRequest.newBuilder(requestUri(since, until))
       .header("Accept", "application/x-ndjson")
-      .timeout(cfg.requestTimeout)
+      .timeout(RequestTimeout)
       .GET()
       .build()
     var attempt = 0
@@ -165,7 +140,7 @@ class LichessClient(cfg: LichessConfig,
           if (status != 429 && status < 500)
             throw new java.io.IOException(
               s"games-export API returned HTTP $status for ${req.uri()}")
-          if (attempt >= cfg.maxRetries)
+          if (attempt >= MaxRetries)
             throw new java.io.IOException(
               s"games-export API returned HTTP $status for " +
                 s"${req.uri()} after ${attempt + 1} attempts")
@@ -173,7 +148,7 @@ class LichessClient(cfg: LichessConfig,
             retryAfterMs(r).getOrElse(backoffMs(attempt))
           else backoffMs(attempt))
         case Left(e) =>
-          if (attempt >= cfg.maxRetries) throw e
+          if (attempt >= MaxRetries) throw e
           sleeper(backoffMs(attempt))
       }
       attempt += 1
@@ -183,6 +158,20 @@ class LichessClient(cfg: LichessConfig,
 }
 
 object LichessClient {
+
+  /** The query params the reference sends on every pull. */
+  private val FixedParams = Seq("perfType" -> "ultraBullet, bullet, blitz",
+    "analysed" -> "true", "clocks" -> "true", "opening" -> "true", "sort" -> "dateAsc")
+
+  private val RequestTimeout = Duration.ofSeconds(30)
+
+  /** Transient failures retry at most this often: 4 attempts in all. */
+  private val MaxRetries = 3
+
+  /** Exponential backoff base (doubles per attempt) when the server
+    * sends no `Retry-After`, and the ceiling on any single sleep. */
+  private val RetryBaseMs = 500L
+  private val RetryMaxMs = 10000L
 
   /** The trimmed, non-blank lines of an NDJSON body, decoded as UTF-8
     * and read as the caller asks for them: one read buffer, whatever the

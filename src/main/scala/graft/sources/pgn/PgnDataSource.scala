@@ -1,11 +1,8 @@
 package graft.sources.pgn
 
-import java.io.{BufferedWriter, OutputStreamWriter}
-import java.nio.channels.{Channels, FileChannel}
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
+import java.nio.file.{Files, Path, Paths}
 import java.util
+import graft.AtomicFile
 import graft.sources.Pgn
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
@@ -21,10 +18,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DataSource V2 `format("pgn")` (SURVEY §4.3's optional S7 ergonomics):
   * `puzzleGames.toDF.write.format("pgn").mode("overwrite").save(dir)`.
   *
-  * Each task writes one standalone .pgn file through a temp-file, fsync
-  * and commit-rename protocol (idempotent under task retry — the
-  * committer discipline the reference's shared-append sink lacked,
-  * SURVEY §2A R10), and the job commit fsyncs the directory. Through
+  * Each task publishes one standalone .pgn file as an [[AtomicFile]]
+  * (idempotent under task retry — the committer discipline the
+  * reference's shared-append sink lacked, SURVEY §2A R10), and the job
+  * commit fsyncs the directory once. Through
   * `format("pgn")`, game numbering restarts per file, matching the
   * reference's per-output-file `[Game N]` semantics without its
   * cross-partition interleaving race. `graft.sources.Pgn.write`
@@ -109,9 +106,7 @@ private[sources] class PgnBatchWrite(path: String, writeId: String, ordinals: Ar
       if (!parts(p.getFileName.toString))
         org.apache.commons.io.FileUtils.forceDelete(p.toFile)
     } finally s.close()
-    // the parts' renames (and the deletes) become durable
-    val d = FileChannel.open(dir, READ)
-    try d.force(true) finally d.close()
+    AtomicFile.syncDir(dir) // the parts' renames (and the deletes) become durable
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -123,17 +118,14 @@ private[sources] class PgnBatchWrite(path: String, writeId: String, ordinals: Ar
 
 private[pgn] case class PgnCommit(file: String) extends WriterCommitMessage
 
-/** Writes one part file, its games numbered from `start + 1`;
+/** Writes one part file as an [[AtomicFile]], its games numbered from `start + 1`;
   * `ordinals(i)` is the input ordinal of column i of [[Pgn.schema]]. */
 private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
     taskId: Long, start: Long) extends DataWriter[InternalRow] {
 
-  private val tmp = Paths.get(dir, s".$name-$taskId.tmp")
   private val dst = Paths.get(dir, name)
-  Files.createDirectories(tmp.getParent)
-  private val ch = FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
-  private val out =
-    new BufferedWriter(new OutputStreamWriter(Channels.newOutputStream(ch), UTF_8.newEncoder()))
+  private val file = new AtomicFile(Paths.get(dir, s".$name-$taskId.tmp"), dst)
+  private val out = file.writer
   private var n = start
 
   override def write(row: InternalRow): Unit = {
@@ -142,19 +134,11 @@ private[pgn] class PgnWriter(dir: String, name: String, ordinals: Array[Int],
     out.write('\n')
   }
 
-  /** The part's bytes are fsynced before its rename publishes them;
-    * the job commit then fsyncs the directory. */
-  override def commit(): WriterCommitMessage = {
-    out.flush()
-    if (n > start) ch.force(true)
-    out.close()
-    if (n == start) { Files.deleteIfExists(tmp); PgnCommit("") }
-    else {
-      Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
-      PgnCommit(dst.toString)
-    }
-  }
+  /** An empty part publishes nothing. */
+  override def commit(): WriterCommitMessage =
+    if (n == start) { file.cancel(); PgnCommit("") }
+    else { file.commit(); PgnCommit(dst.toString) }
 
-  override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
+  override def abort(): Unit = file.cancel()
   override def close(): Unit = ()
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, FileNotFoundException}
-import java.nio.channels.{Channels, FileChannel}
-import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption, StandardOpenOption, Path => JPath}
+import java.io.FileNotFoundException
+import java.nio.file.{Files, NoSuchFileException, Paths, Path => JPath}
 import java.util.UUID
 
+import graft.AtomicFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
@@ -21,11 +21,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * `_spark_metadata/N`, `commits/N`), so a small trigger spent most of
   * its WAL and commit phases spawning processes.
   *
-  * Here a write goes to a hidden temp file in the target's directory, is
-  * fsynced, and becomes visible in one atomic step: a rename when
-  * overwriting is allowed, a hard link otherwise, so a no-overwrite write
-  * onto an existing file fails with Hadoop's `FileAlreadyExistsException`
-  * (what the metadata logs catch) even against a concurrent writer. No
+  * Here a write is an [[AtomicFile]] staged as a hidden, uniquely named
+  * file beside its target, published by a rename when overwriting is
+  * allowed and by a hard link otherwise, so a no-overwrite write onto an
+  * existing file fails with Hadoop's `FileAlreadyExistsException` (what
+  * the metadata logs catch) even against a concurrent writer. No
   * `.crc` is written, and a replaced file's stale Hadoop `.crc` sibling
   * is deleted, so a file first written by Spark's default manager still
   * reads back through it. Reads and listings go through Hadoop's raw
@@ -73,10 +73,9 @@ object LocalCheckpointFiles {
 
     def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
       val target = local(p)
-      Files.createDirectories(target.getParent)
-      val temp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp")
-      new AtomicFile(FileChannel.open(temp, StandardOpenOption.CREATE_NEW,
-        StandardOpenOption.WRITE), temp, target, overwriteIfPossible)
+      val f = new AtomicFile(target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp"),
+        target)
+      new Output(f, target, overwriteIfPossible)
     }
 
     def open(p: Path): FSDataInputStream = raw.open(p)
@@ -100,37 +99,29 @@ object LocalCheckpointFiles {
     }
   }
 
-  /** Bytes go to `temp`; `close` makes them durable and then visible as
-    * `target`, `cancel` discards them. Either way `temp` is gone after. */
-  private final class AtomicFile(ch: FileChannel, temp: JPath, target: JPath,
-      overwrite: Boolean)
-      extends CancellableFSDataOutputStream(
-        new BufferedOutputStream(Channels.newOutputStream(ch), 1 << 16)) {
+  /** `close` publishes `f` as `target`, `cancel` discards it; either way
+    * its staging file is gone after. */
+  private final class Output(f: AtomicFile, target: JPath, overwrite: Boolean)
+      extends CancellableFSDataOutputStream(f.out) {
     private var done = false
 
     override def close(): Unit = synchronized {
       if (!done) {
         done = true
         try {
-          try { flush(); ch.force(true) } finally super.close()
           if (overwrite) {
             Files.deleteIfExists(crc(target))
-            Files.move(temp, target, StandardCopyOption.ATOMIC_MOVE)
+            f.commit()
           } else {
-            try Files.createLink(target, temp)
+            try f.commit(replace = false)
             catch { case _: java.nio.file.FileAlreadyExistsException =>
               throw new FileAlreadyExistsException(s"$target already exists") }
             Files.deleteIfExists(crc(target))
           }
-        } finally Files.deleteIfExists(temp)
+        } finally f.cancel()
       }
     }
 
-    def cancel(): Unit = synchronized {
-      if (!done) {
-        done = true
-        try ch.close() finally Files.deleteIfExists(temp)
-      }
-    }
+    def cancel(): Unit = synchronized { done = true; f.cancel() }
   }
 }

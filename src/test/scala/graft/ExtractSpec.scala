@@ -182,7 +182,7 @@ class ExtractSpec extends AnyFunSuite with TempDirs {
       val state = tempDir
       val delays = scala.collection.mutable.ArrayBuffer.empty[Long]
       val client = new LichessClient(
-        LichessConfig(url, "u", maxRetries = 2, retryBaseMs = 1),
+        LichessConfig(url, "u"),
         LichessClient.defaultClient, delays += _)
       val out = new Extract(state).run(client.fetch, state.resolve("raw"), 100L)
       assert(out.isDefined)
@@ -201,7 +201,7 @@ class ExtractSpec extends AnyFunSuite with TempDirs {
       (200, Map.empty[String, String], """{"id":"g"}"""))) { (url, requests) =>
       val delays = scala.collection.mutable.ArrayBuffer.empty[Long]
       val client = new LichessClient(
-        LichessConfig(url, "u", maxRetries = 3, retryMaxMs = 10000),
+        LichessConfig(url, "u"),
         LichessClient.defaultClient, delays += _)
       assert(client.fetch(None, 1L).toVector === Vector("""{"id":"g"}"""))
       assert(requests() === 3)
@@ -216,15 +216,15 @@ class ExtractSpec extends AnyFunSuite with TempDirs {
       val state = tempDir
       val delays = scala.collection.mutable.ArrayBuffer.empty[Long]
       val client = new LichessClient(
-        LichessConfig(url, "u", maxRetries = 2, retryBaseMs = 4),
+        LichessConfig(url, "u"),
         LichessClient.defaultClient, delays += _)
       val ex = new Extract(state)
       val err = intercept[java.io.IOException] {
         ex.run(client.fetch, state.resolve("raw"), 100L)
       }
-      assert(err.getMessage.contains("after 3 attempts"))
-      assert(requests() === 3)
-      assert(delays.toSeq === Seq(4L, 8L)) // base · 2^attempt
+      assert(err.getMessage.contains("after 4 attempts"))
+      assert(requests() === 4)
+      assert(delays.toSeq === Seq(500L, 1000L, 2000L)) // base · 2^attempt
       assert(ex.loadWatermark() === None) // at-least-once preserved
     }
   }
@@ -233,7 +233,7 @@ class ExtractSpec extends AnyFunSuite with TempDirs {
     withScriptedServer(Seq((404, Map.empty[String, String], "no such user"))) {
       (url, requests) =>
       val client = new LichessClient(
-        LichessConfig(url, "u", maxRetries = 5),
+        LichessConfig(url, "u"),
         LichessClient.defaultClient, _ => fail("must not sleep on 4xx"))
       intercept[java.io.IOException] { client.fetch(None, 1L) }
       assert(requests() === 1)
@@ -313,7 +313,7 @@ class ExtractSpec extends AnyFunSuite with TempDirs {
       val ex = new Extract(state)
       ex.run((_, _) => Iterator.single("""{"id":"g0"}"""), raw, 100L)
       val client = new LichessClient(LichessConfig(
-        s"http://127.0.0.1:${server.getLocalPort}/api/games/user", "u", maxRetries = 0))
+        s"http://127.0.0.1:${server.getLocalPort}/api/games/user", "u"))
       intercept[java.io.IOException](ex.run(client.fetch, raw, 200L))
       assert(names(raw) === Seq("games_0_100.ndjson"))
       assert(ex.loadWatermark() === Some(100L))

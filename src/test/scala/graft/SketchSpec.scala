@@ -224,6 +224,5 @@ class SketchSpec extends AnyFunSuite with SparkTestBase {
       assert(k.startsWith("spark."), k)
       assert(v.nonEmpty)
     }
-    assert(graft.Tuning.shufflePartitions(spark) >= 32)
   }
 }
