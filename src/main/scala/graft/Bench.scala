@@ -65,10 +65,10 @@ import java.util.Locale
   * it ran alongside: /proc/stat busy jiffies minus this JVM's process
   * CPU time, over the query's wall interval, in cores — a direct
   * measurement of co-tenant CPU inside the timing window. A
-  * measurement is CLEAN when external CPU ≤ SPARK_GRAFT_BENCH_EXT_MAX
-  * (default 2.0 cores); per-query medians use clean passes only, any
-  * query left with NO clean measurement is re-timed once after a fresh
-  * load gate (budget permitting), and queries still unclean are listed
+  * measurement is CLEAN when external CPU ≤ `ExtMax` (2.0 cores);
+  * per-query medians use clean passes only, any query left with NO
+  * clean measurement is re-timed once after a fresh load gate (budget
+  * permitting), and queries still unclean are listed
   * under "hot" in the stdout tail JSON so the driver can mechanically
   * discount them instead of reading contention as regression. The full
   * record carries every pass's per-query ext stamps. Two further
@@ -88,6 +88,21 @@ object Bench {
   // size; per-query detail lives in the full record file.
   @volatile private var shortLine: String = ""
   @volatile private var cleanExit: Boolean = false
+
+  /** A measurement is clean when at most this many cores of external
+    * CPU ran alongside it. */
+  private val ExtMax = 2.0
+  /** I/O-contaminated when ≥ 20 % of its wall window was system-wide
+    * full-stall on I/O; own-load full-stall is ~0 (doc on [[M]]). */
+  private val IoMax = 0.2
+  /** Capacity-contaminated when BOTH boundary canary samples exceed
+    * this multiple of the run's floor (doc on [[M]]; measured healthy-
+    * host distribution: p50 ≈ 1.3×, p90 ≈ 3× floor as single samples,
+    * but min-of-two-adjacent over 3× is ~1 % healthy vs the rule during
+    * an episode, which holds whole ~minutes windows at 2.5-5×). */
+  private val CapMax = 2.5
+  /** Each load gate waits for the 1-min load average to drop under this. */
+  private val LoadMax = 2.0
 
   private def f3(d: Double): String = String.format(Locale.ROOT, "%.3f", d)
 
@@ -190,16 +205,6 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
 
-    val extMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXT_MAX", "2.0").toDouble
-    // a query is I/O-contaminated when ≥ 20 % of its wall window was
-    // system-wide full-stall on I/O; own-load full-stall is ~0 (doc on M)
-    val ioMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_IO_MAX", "0.2").toDouble
-    // capacity-contaminated when BOTH boundary canary samples exceed
-    // capMax × the run's floor (doc on M; measured healthy-host
-    // distribution: p50 ≈ 1.3×, p90 ≈ 3× floor as single samples, but
-    // min-of-two-adjacent over 3× is ~1 % healthy vs the rule during an
-    // episode, which holds whole ~minutes windows at 2.5-5×)
-    val capMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP_MAX", "2.5").toDouble
     val canary =
       try Some(new CanaryProbe.Canary(cpus.toInt, cpus.toInt))
       catch { case _: Throwable => None }
@@ -215,9 +220,9 @@ object Bench {
       v
     }.getOrElse(0.0)
     var lastCap = canarySample()
-    def clean(m: M): Boolean = m.sec >= 0 && m.ext <= extMax &&
-      m.io <= ioMax &&
-      (capFloor == Double.MaxValue || m.cap <= capFloor * capMax)
+    def clean(m: M): Boolean = m.sec >= 0 && m.ext <= ExtMax &&
+      m.io <= IoMax &&
+      (capFloor == Double.MaxValue || m.cap <= capFloor * CapMax)
     def once(name: String): M = {
       val j0 = busyJiffies()
       val s0 = ioStallMicros()
@@ -256,15 +261,14 @@ object Bench {
     // bypassed the record-only gate, and its sql1/m5/m7 readings were
     // contention noise the driver can't tell from regressions). Before
     // warmup and before each timed pass, wait until the 1-min load
-    // average drops under SPARK_GRAFT_BENCH_LOAD_MAX (default 2.0),
-    // bounded per gate and by the global deadline; every gate event is
-    // recorded in bench_full.json AND the stdout tail JSON, so a
-    // still-contended artifact is self-describing.
-    val loadMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_MAX", "2.0").toDouble
+    // average drops under `LoadMax` (2.0), bounded per gate and by the
+    // global deadline; every gate event is recorded in bench_full.json
+    // AND the stdout tail JSON, so a still-contended artifact is
+    // self-describing.
     val gateEvents = scala.collection.mutable.ArrayBuffer.empty[String]
     def loadGate(tag: String): Unit = {
       var waited = 0
-      while (loadAvg > loadMax && waited < 120 && remaining > 60) {
+      while (loadAvg > LoadMax && waited < 120 && remaining > 60) {
         Thread.sleep(5000); waited += 5
       }
       gateEvents +=
@@ -301,8 +305,8 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap)
     } catch { case _: Throwable => None }
 
-    // per-query value: median over the CLEAN measurements (ext ≤ extMax
-    // AND io ≤ ioMax AND cap under gate; `extra` measurements — retimes
+    // per-query value: median over the CLEAN measurements (ext ≤ ExtMax
+    // AND io ≤ IoMax AND cap under gate; `extra` measurements — retimes
     // and aborted-pass survivors — included); a query with successes
     // but zero clean ones falls back to the all-measurements median and
     // is listed under "hot"
@@ -447,15 +451,15 @@ object Bench {
           // ext_gate/io_gate = the configured clean-pass thresholds;
           // ext_peak/io_peak = the worst readings actually measured
           // (named so a reader cannot mistake config for measurement)
-          s""""ext_gate":${f3(extMax)},"ext_peak":${f3(
+          s""""ext_gate":${f3(ExtMax)},"ext_peak":${f3(
             perPass.flatMap(_.values.map(_.ext)).foldLeft(0.0)(math.max))},""" +
-          s""""io_gate":${f3(ioMax)},"io_peak":${f3(
+          s""""io_gate":${f3(IoMax)},"io_peak":${f3(
             perPass.flatMap(_.values.map(_.io)).foldLeft(0.0)(math.max))},""" +
           // cap_floor = the run's best canary reading (seconds);
           // cap_gate = the relative threshold; cap_peak = worst
           // min-of-two-boundaries stamp actually attached to a query
           s""""cap_floor":${f3(if (capFloor == Double.MaxValue) -1.0
-            else capFloor)},"cap_gate":${f3(capMax)},"cap_peak":${f3(
+            else capFloor)},"cap_gate":${f3(CapMax)},"cap_peak":${f3(
             perPass.flatMap(_.values.map(_.cap)).foldLeft(0.0)(math.max))},""" +
           s""""hot":$hotFull,""" +
           s""""load_gate":${gateEvents.mkString("[", ",", "]")},""" +
@@ -608,7 +612,7 @@ object Bench {
     }
 
     // Contamination rescue: queries whose EVERY successful measurement
-    // carried an external-CPU stamp above extMax get one re-time behind
+    // carried an external-CPU stamp above ExtMax get one re-time behind
     // a fresh load gate (budget permitting); the final emit folds the
     // clean re-times into the medians and lists whatever remains
     // unclean under "hot".

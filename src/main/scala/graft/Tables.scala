@@ -8,6 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * through here, so the scan path (vectorized parquet reader, pushdown,
   * pruning) is uniform. At 100 TB these would be partitioned/bucketed
   * catalog tables; the single-parquet layout is the driver's fixture shape.
+  *
+  * Scratch rule: an inventory entry's output lives at
+  * `<per-JVM root>/<entry>_<dataTag(d)>`, keyed by entry name and
+  * dataset, and a catalog table it keeps there carries the same name.
+  * Entries get these names only from `scratch(entry, d)`,
+  * [[freshScratch]] (the directory, emptied) and [[freshTable]] (the
+  * table, dropped, and its directory, emptied); TablesSpec fails when a
+  * module under operators/, sources/ or streaming/ builds one itself.
   */
 object Tables {
   /** Query signature used across the whole engine. */
@@ -102,8 +110,51 @@ object Tables {
     dir
   }
 
-  /** An entry's scratch path under the per-JVM root. */
+  /** A path under the per-JVM root that no inventory entry owns (a test
+    * session's warehouse, a diagnostic's scenario directory). */
   def scratch(name: String): String = scratchRoot.resolve(name).toString
+
+  /** The dataset part of a scratch name: the sanitized-path tail
+    * (readable in scratch listings) plus an 8-hex SHA-1 of the FULL
+    * path, so two dataset roots that share a sanitized 24-character
+    * tail still map to different directories and tables. */
+  def dataTag(d: String): String = {
+    val sha = java.security.MessageDigest.getInstance("SHA-1")
+      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(4).map(b => f"$b%02x").mkString
+    s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24) + s"_$sha"
+  }
+
+  /** `entry`'s scratch path for dataset `d` (not reset). */
+  def scratch(entry: String, d: String): String = scratch(s"${entry}_${dataTag(d)}")
+
+  /** `entry`'s scratch path for dataset `d`, emptied first. */
+  def freshScratch(entry: String, d: String): String = {
+    val dir = scratch(entry, d)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    dir
+  }
+
+  /** `entry`'s catalog table for dataset `d`: dropped if it exists, its
+    * scratch directory (`scratch(entry, d)`, the table's LOCATION)
+    * emptied, and its name returned. The drop comes first: emptying the
+    * directory under a live table makes the drop's listing log a
+    * spurious FileNotFound, and a CTAS refuses a non-empty location. */
+  def freshTable(s: SparkSession, entry: String, d: String): String = {
+    val table = s"${entry}_${dataTag(d)}"
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    freshScratch(entry, d)
+    table
+  }
+
+  /** The small-input gate: a frame whose optimized-plan size estimate is
+    * at most 32 MB is fixture-sized. Entries below it trade scale-shaped
+    * plans for ones that fit a few thousand rows (compact caches to a few
+    * partitions, broadcast dims, pin exchange widths), since ~150 ms of
+    * fixed per-task cost, not data, dominates their stages. Leaves
+    * without statistics estimate Long.MaxValue and so count as large. */
+  def isSmall(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -52,10 +52,9 @@ object Verify {
     // recall, streaming scenarios) get a CURRENT-round quality proof
     // here instead of riding on a stale manually-run one. Emitted after
     // the gate artifacts and individually fenced — an artifact failure
-    // must never cost correctness entries. Opt out with
-    // SPARK_GRAFT_SKIP_ARTIFACTS=1 (e.g. spec runs).
-    if (artifacts && names.isEmpty && !sys.env.contains("SPARK_GRAFT_SKIP_ARTIFACTS") &&
-        failed.isEmpty) {
+    // must never cost correctness entries. Callers opt out with
+    // `artifacts = false` (e.g. spec runs).
+    if (artifacts && names.isEmpty && failed.isEmpty) {
       val tag = roundTag()
       try Recall.run(spark, sfDir, s"RECALL_$tag.json")
       catch { case e: Throwable =>

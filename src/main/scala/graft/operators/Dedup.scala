@@ -183,7 +183,7 @@ object Dedup {
     // of fixed plan-closure cost at fixture scale, that overhead (not
     // data) dominated every stage. Above the gate the natural partitioning
     // stands, and the verifier dims join by shuffle instead of broadcast.
-    val small = docs.queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+    val small = Tables.isSmall(docs)
     def compact(df: DataFrame): DataFrame = if (small) df.coalesce(8) else df
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val base = compact(docTokenSets(docs)
@@ -599,8 +599,7 @@ object Dedup {
     "l2b2_simhash_dedup" -> ((s, d) => {
       // small-input gate: compact the tiny fingerprint cache (1 row/doc)
       // so downstream band-join stages stop paying 32 tasks of fixed cost
-      val small = Tables.documents(s, d)
-        .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+      val small = Tables.isSmall(Tables.documents(s, d))
       val sh0 = queries("l2b_simhash")(s, d)
       val sh = (if (small) sh0.coalesce(8) else sh0).cache() // (doc_id, simhash)
       sh.count() // materialize once: both band-join map stages launch
@@ -731,8 +730,7 @@ object Dedup {
       // r10): unconditional coalesce(8) would serialize the band joins
       // onto 8 partitions on a big fixture, diverging from the scale
       // posture the twin is meant to mirror
-      val small = Tables.documents(s, d)
-        .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+      val small = Tables.isSmall(Tables.documents(s, d))
       val sh0 = queries("l2b_simhash")(s, d)
       val sh = if (small) sh0.coalesce(8) else sh0
       simhashBandPairs(sh, pinPartitions = if (small) Some(8) else None)
@@ -896,8 +894,7 @@ object Dedup {
     // verify joins into broadcast-hash joins, and the caches can compact
     // to modest parallelism. Above the gate the sides grow with the
     // corpus, so the equi-shuffle shape (what scales) is kept.
-    val smallCorpus = Tables.documents(s, d)
-      .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+    val smallCorpus = Tables.isSmall(Tables.documents(s, d))
     def hint(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val arrs0 = Tables.fanOut(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"),
@@ -1054,8 +1051,7 @@ object Dedup {
     */
   def containmentTopK(s: SparkSession, d: String, k: Int,
       t: Double = 0.9, maxDf: Int = 100): DataFrame = {
-    val smallCorpus = Tables.documents(s, d)
-      .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+    val smallCorpus = Tables.isSmall(Tables.documents(s, d))
     def hint(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val arrs0 = Tables.fanOut(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"),
@@ -1169,8 +1165,7 @@ object Dedup {
     */
   private def jaccardRepLevel(s: SparkSession, d: String,
       t: Double): (DataFrame, DataFrame) = {
-    val smallCorpus = Tables.documents(s, d)
-      .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+    val smallCorpus = Tables.isSmall(Tables.documents(s, d))
     def hint(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val arrs0 = Tables.fanOut(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"),

@@ -434,12 +434,14 @@ object Joins {
     // it follows the text). Stats collection is the knob that keeps
     // broadcast/reorder decisions honest when estimates would lie.
     "j17_cbo_reorder" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val (li, od, cu) = (s"j17_li_$tag", s"j17_od_$tag", s"j17_cu_$tag")
-      def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val path = Tables.scratch(s"graft_$name")
-        df.write.mode("overwrite").option("path", path).saveAsTable(name)
+      // one chain: reset the entry's table, write it, ANALYZE its keys
+      def save(entry: String, df: org.apache.spark.sql.DataFrame,
+          keys: String): String = {
+        val table = Tables.freshTable(s, entry, d)
+        df.write.mode("overwrite").option("path", Tables.scratch(entry, d))
+          .saveAsTable(table)
+        s.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS FOR COLUMNS $keys")
+        table
       }
       // The three save→ANALYZE chains are mutually independent (each
       // touches only its own table), so they run overlapped from three
@@ -450,24 +452,18 @@ object Joins {
       // sequential setup at ~1.3 s of 1.7 s steady build. The final
       // 3-way join still starts only after ALL chains complete
       // (Await below), so the stats CBO reads are exactly the same.
-      val pipelines: Seq[() => Unit] = Seq(
-        () => {
-          save(li, Tables.lineitem(s, d).select(col("l_orderkey"),
-            expr("CAST(ROUND(l_extendedprice * 1e2, 0) AS BIGINT)").as("cents")))
-          s.sql(s"ANALYZE TABLE $li COMPUTE STATISTICS FOR COLUMNS l_orderkey")
-        },
-        () => {
-          save(od, Tables.orders(s, d)
-            .select(col("o_orderkey"), col("o_custkey")))
-          s.sql(s"ANALYZE TABLE $od COMPUTE STATISTICS FOR COLUMNS o_orderkey, o_custkey")
-        },
-        () => {
-          save(cu, Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_mktsegment")))
-          s.sql(s"ANALYZE TABLE $cu COMPUTE STATISTICS FOR COLUMNS c_custkey, c_mktsegment")
-        })
+      val pipelines: Seq[() => String] = Seq(
+        () => save("j17_li", Tables.lineitem(s, d).select(col("l_orderkey"),
+            expr("CAST(ROUND(l_extendedprice * 1e2, 0) AS BIGINT)").as("cents")),
+          "l_orderkey"),
+        () => save("j17_od", Tables.orders(s, d)
+            .select(col("o_orderkey"), col("o_custkey")),
+          "o_orderkey, o_custkey"),
+        () => save("j17_cu", Tables.customer(s, d)
+            .select(col("c_custkey"), col("c_mktsegment")),
+          "c_custkey, c_mktsegment"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      try {
+      val Seq(li, od, cu) = try {
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         scala.concurrent.Await.result(

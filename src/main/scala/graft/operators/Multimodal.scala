@@ -115,11 +115,8 @@ object Multimodal {
     // convention: identity lives in the filename), and digest-checks
     // the payload against the source-of-truth table via the oracle.
     "l8e_multimodal_binaryfile" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = java.nio.file.Paths.get(Tables.scratch(s"graft_l8e_assets_$tag"))
-      java.nio.file.Files.createDirectories(dir)
-      dir.toFile.listFiles((_, n) => n.endsWith(".bin")).foreach(_.delete())
-      val dirStr = dir.toString
+      val dirStr = Tables.freshScratch("l8e_assets", d)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dirStr))
       mediaTable(s, d).filter(col("doc_id") % 50 === 0)
         .select(col("doc_id"), col("payload"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>

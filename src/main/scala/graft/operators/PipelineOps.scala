@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.Tables.Q
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -627,8 +626,8 @@ object PipelineOps {
     // collapses, values identical); at 100 TB the same arithmetic yields
     // ~800k 128 MB files.
     "m7_compact" -> ((s, d) => {
-      val frag = Tables.scratch("graft_m7_fragmented")
-      val compact = Tables.scratch("graft_m7_compacted")
+      val frag = Tables.scratch("m7_fragmented", d)
+      val compact = Tables.scratch("m7_compacted", d)
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       ev.repartition(32).write.mode("overwrite").parquet(frag)
@@ -669,8 +668,7 @@ object PipelineOps {
     // established md5-prefix convention). A consumer validates a copy
     // of the release by recomputing exactly this frame.
     "m31_release_manifest" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val rel = Tables.scratch(s"graft_m31_release_$tag")
+      val rel = Tables.scratch("m31_release", d)
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("text"),
           col("n_chars"))
@@ -702,9 +700,7 @@ object PipelineOps {
     // is a normal scan of the listed files (column-pruned, stats-
     // skipped like any other).
     "m32_time_travel" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = Tables.scratch(s"graft_m32_table_$tag")
-      FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Tables.freshScratch("m32_table", d)
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -740,9 +736,7 @@ object PipelineOps {
     // 100 TB an incremental consumer pays for what changed, not for the
     // table. Downstream incremental aggregation over this feed is m34.
     "m33_table_changes" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = Tables.scratch(s"graft_m33_table_$tag")
-      FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Tables.freshScratch("m33_table", d)
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -779,8 +773,7 @@ object PipelineOps {
     // 100 TB: refresh ∝ |delta| + |view| — the whole point of
     // incremental view maintenance.
     "m34_incremental_agg" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val view = Tables.scratch(s"graft_m34_view_$tag")
+      val view = Tables.scratch("m34_view", d)
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"), col("o_orderpriority"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -815,8 +808,7 @@ object PipelineOps {
     // break the hash. Audit cost ∝ |staged batch|, publish cost =
     // metadata — never a rescan of the live table.
     "m35_write_audit_publish" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val stage = Tables.scratch(s"graft_m35_stage_$tag")
+      val stage = Tables.scratch("m35_stage", d)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
       val batchA = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
@@ -862,9 +854,7 @@ object PipelineOps {
     // raw orders, catching both failure modes. Cost: manifest set
     // arithmetic + deletes — metadata-sized at any table size.
     "m37_snapshot_expire" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = Tables.scratch(s"graft_m37_table_$tag")
-      FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Tables.freshScratch("m37_table", d)
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -911,9 +901,7 @@ object PipelineOps {
     // commit file is bytes and the atomicity comes from its single
     // create, exactly as table formats do it.
     "m39_multi_table_commit" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val base = Tables.scratch(s"graft_m39_$tag")
-      FileUtils.deleteQuietly(new java.io.File(base))
+      val base = Tables.freshScratch("m39", d)
       val orders = Tables.orders(s, d).select(
         col("o_custkey"), year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -980,9 +968,7 @@ object PipelineOps {
     // disk for m37's expire to reclaim — rollback and GC are separate
     // concerns, exactly as in a real table format.
     "m38_snapshot_rollback" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = Tables.scratch(s"graft_m38_table_$tag")
-      FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Tables.freshScratch("m38_table", d)
       val orders = Tables.orders(s, d).select(
         year(col("o_orderdate")).as("yr"),
         expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)").as("cents"))
@@ -1053,11 +1039,8 @@ object PipelineOps {
     // late CDC merge.
     "m40_compact_commit" -> ((s, d) => {
       SqlFrontend.registerViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"m40_bal_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "m40_bal", d)
+      val path = Tables.scratch("m40_bal", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -1086,11 +1069,8 @@ object PipelineOps {
     // fragments into skippable files WITHOUT a table-wide rewrite.
     "m40b_compact_zorder" -> ((s, d) => {
       SqlFrontend.registerViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"m40b_bal_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "m40b_bal", d)
+      val path = Tables.scratch("m40b_bal", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT /*+ REPARTITION(12) */ o_custkey AS custkey, COUNT(*) AS n,
@@ -1125,11 +1105,8 @@ object PipelineOps {
     // streaming table commit as fast as a day-old one.
     "m41_commit_log_checkpoint" -> ((s, d) => {
       SqlFrontend.registerViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"m41_bal_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "m41_bal", d)
+      val path = Tables.scratch("m41_bal", d)
       new java.io.File(path).mkdirs()
       s.sql(
         s"""CREATE TABLE $tbl (custkey BIGINT, n BIGINT, cents BIGINT,
@@ -1162,8 +1139,7 @@ object PipelineOps {
     }),
 
     "m28_vacuum" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val dir = Tables.scratch(s"graft_m28_table_$tag")
+      val dir = Tables.scratch("m28_table", d)
       vacuumed(Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value")), dir)
         .agg(count(lit(1)).as("n"),
@@ -1223,8 +1199,7 @@ object PipelineOps {
       // small-input gate: compact the per-doc caches to 8 partitions so
       // the band join / CC / membership stages stop paying 32 tasks of
       // fixed plan-closure cost over a few thousand cached rows
-      val small = Tables.documents(s, d)
-        .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+      val small = Tables.isSmall(Tables.documents(s, d))
       def compact(df: org.apache.spark.sql.DataFrame) =
         if (small) df.coalesce(8) else df
       val sh = compact(Dedup.queries("l2b_simhash")(s, d)).cache() // (doc_id, simhash)
@@ -1279,8 +1254,7 @@ object PipelineOps {
       // same small-input stats gate as the production twin m5 (ADVICE
       // r10): compact only when the corpus is small so the twin stays
       // plan-equivalent to the entry it hash-checks
-      val small = Tables.documents(s, d)
-        .queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+      val small = Tables.isSmall(Tables.documents(s, d))
       val sh0 = Dedup.queries("l2b_simhash")(s, d)
       val sh = (if (small) sh0.coalesce(8) else sh0).cache()
       sh.count()
@@ -1499,8 +1473,7 @@ object PipelineOps {
     // precedent); day keys are integer µs division, not date_trunc
     // (engine-neutral).
     "m23_incremental_rollup" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val snap = Tables.scratch(s"graft_m23_rollup_$tag")
+      val snap = Tables.scratch("m23_rollup", d)
       val ev = Tables.events(s, d)
       val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       incrementalRollup(ev, maxUs - 7L * 86400000000L, snap)
@@ -1543,8 +1516,7 @@ object PipelineOps {
     // data's own min-day (one 1-row agg job, the dimBounds class) in
     // both engines.
     "m25_partition_overwrite" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val path = Tables.scratch(s"graft_m25_pow_$tag")
+      val path = Tables.scratch("m25_pow", d)
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("value"), expr("unix_micros(ts) div 86400000000").as("day_no"))
       ev.write.mode("overwrite").partitionBy("day_no").parquet(path)
@@ -1592,8 +1564,7 @@ object PipelineOps {
     // carry rows; at 100 TB the quarantine write is violation-sized,
     // never table-sized.
     "m27_quarantine_route" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val qpath = Tables.scratch(s"graft_m27_quar_$tag")
+      val qpath = Tables.scratch("m27_quar", d)
       // 'error' events are untrusted telemetry, not product events — so
       // the TYPE route fires on real fixture rows (the r14 branch audit
       // caught the previous allowed-list covering the whole enum, which
@@ -1635,8 +1606,7 @@ object PipelineOps {
     // POINT of the exercise: the same box scan reads a fraction of the
     // bytes a linear layout reads.
     "m14_zorder_layout" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = Tables.scratch(s"graft_m14_zorder_$tag")
+      val out = Tables.scratch("m14_zorder", d)
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("value"))
       val (u0, u1, t0, t1) = dimBounds(ev, "user_id", "ts_us")

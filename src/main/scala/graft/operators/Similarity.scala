@@ -913,8 +913,7 @@ object Similarity {
     // that matches the work, not the bytes. Above the gate the session's
     // natural shuffle planning stands — a fixed 16 would serialize the
     // pair emission behind 16 tasks at any corpus size (ADVICE r4).
-    val smallEmb =
-      embeddings.queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
+    val smallEmb = Tables.isSmall(embeddings)
     val probesKeyed = probes.toDF()
       .select(col("t"), col("bucket"), col("vec_id").as("id_a"))
     val cand = (if (smallEmb) probesKeyed.repartition(16, col("t"), col("bucket"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.Tables.Q
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -288,20 +287,14 @@ object SqlFrontend {
     * (s6b/s13 create tables over EXISTING layouts; nothing exercised
     * CREATE TABLE AS SELECT end to end): materialize a per-status
     * order summary into a parquet-backed catalog table, then read it
-    * back THROUGH the catalog by name. Table/path derive from the data
-    * dir (the s11/s13 multi-fixture-session convention); oracle
+    * back THROUGH the catalog by name. The oracle
     * recomputes the summary from the source, so the materialization
     * must be value-transparent.
     */
   private def ctas(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     withViews(s, d)
-    val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-    val tbl = s"sql11_order_summary_$tag"
-    val path = Tables.scratch(s"graft_$tbl")
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    // DROP leaves the external LOCATION on disk and CTAS refuses a
-    // non-empty dir — idempotent re-runs must clear the layout first
-    FileUtils.deleteQuietly(new java.io.File(path))
+    val tbl = Tables.freshTable(s, "sql11_order_summary", d)
+    val path = Tables.scratch("sql11_order_summary", d)
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -325,11 +318,8 @@ object SqlFrontend {
     */
   private def mergeInto(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     withViews(s, d)
-    val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-    val tbl = s"sql13_balance_$tag"
-    val path = Tables.scratch(s"graft_$tbl")
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    FileUtils.deleteQuietly(new java.io.File(path))
+    val tbl = Tables.freshTable(s, "sql13_balance", d)
+    val path = Tables.scratch("sql13_balance", d)
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -357,11 +347,8 @@ object SqlFrontend {
       postSelect: String = "custkey, n, cents")
       : org.apache.spark.sql.DataFrame = {
     withViews(s, d)
-    val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-    val tbl = s"${name}_balance_$tag"
-    val path = Tables.scratch(s"graft_$tbl")
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    FileUtils.deleteQuietly(new java.io.File(path))
+    val tbl = Tables.freshTable(s, s"${name}_balance", d)
+    val path = Tables.scratch(s"${name}_balance", d)
     s.sql(
       s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
          |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -421,11 +408,8 @@ object SqlFrontend {
     // a new clustering key.
     "sql25_maintenance_sql" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql25_balance_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql25_balance", d)
+      val path = Tables.scratch("sql25_balance", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -459,11 +443,8 @@ object SqlFrontend {
     // O(table).
     "sql23_update_partition_move" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql23_balance_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql23_balance", d)
+      val path = Tables.scratch("sql23_balance", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS
@@ -487,11 +468,8 @@ object SqlFrontend {
     // recomputes every entry from the raw orders with the same CASE.
     "sql24_update_map_key" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql24_counters_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql24_counters", d)
+      val path = Tables.scratch("sql24_counters", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_custkey AS custkey,
@@ -541,11 +519,8 @@ object SqlFrontend {
     // that the keep-old branch stays live.
     "sql17_update_nested" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql17_nested_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql17_nested", d)
+      val path = Tables.scratch("sql17_nested", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_orderkey AS okey,
@@ -646,11 +621,8 @@ object SqlFrontend {
     // like Delta/Iceberg commit conflicts.
     "sql20_concurrent_retry" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql20_balance_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql20_balance", d)
+      val path = Tables.scratch("sql20_balance", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet LOCATION '$path' AS
            |SELECT o_custkey AS custkey, COUNT(*) AS n,
@@ -696,11 +668,8 @@ object SqlFrontend {
     // O(touched files + the new day), never O(table).
     "sql21_merge_partitioned" -> ((s, d) => {
       withViews(s, d)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"sql21_balance_$tag"
-      val path = Tables.scratch(s"graft_$tbl")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      FileUtils.deleteQuietly(new java.io.File(path))
+      val tbl = Tables.freshTable(s, "sql21_balance", d)
+      val path = Tables.scratch("sql21_balance", d)
       s.sql(
         s"""CREATE TABLE $tbl USING parquet PARTITIONED BY (yr)
            |LOCATION '$path' AS

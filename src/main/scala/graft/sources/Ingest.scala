@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Sources and sinks (SURVEY.md §2B S1–S8). Round-trip queries write to
-  * fixed names under the per-JVM `Tables.scratch` root with mode=overwrite
+  * their `Tables.scratch(entry, d)` directories with mode=overwrite
   * (idempotent under re-run) and re-read through the normal scan path, so
   * the sink, the committer, and the reader are all on the verified path.
   */
@@ -74,7 +74,7 @@ object Ingest {
 
     // S4: CSV round-trip with header + explicit schema.
     "s4_csv_roundtrip" -> ((s, d) => {
-      val out = Tables.scratch("graft_s4_nation_csv")
+      val out = Tables.scratch("s4_nation_csv", d)
       Tables.nation(s, d).write.mode("overwrite")
         .option("header", "true").csv(out)
       val schema = StructType(Seq(
@@ -86,7 +86,7 @@ object Ingest {
 
     // S5: NDJSON sink round-trip (Spark writes NDJSON natively).
     "s5_ndjson_roundtrip" -> ((s, d) => {
-      val out = Tables.scratch("graft_s5_events_json")
+      val out = Tables.scratch("s5_events_json", d)
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(out)
@@ -102,7 +102,7 @@ object Ingest {
     // S6: partitioned parquet sink — write orders by year, re-read with
     // partition pruning available, aggregate per partition value.
     "s6_partitioned_parquet" -> ((s, d) => {
-      val out = Tables.scratch("graft_s6_orders_by_year")
+      val out = Tables.scratch("s6_orders_by_year", d)
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         // co-locate each year before the write: one file per partition
@@ -131,16 +131,12 @@ object Ingest {
     // instead of seven. PlanSpec asserts the `dynamicpruning`
     // expression reached the scan's PartitionFilters.
     "s13_dynamic_pruning" -> ((s, d) => {
-      // table/path names derive from the data dir like s11's (ADVICE r8:
-      // fixed names let sessions over different fixtures clobber)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val tbl = s"s13_orders_by_year_$tag"
-      val out = Tables.scratch(s"graft_s13_orders_by_year_$tag")
+      val tbl = Tables.freshTable(s, "s13_orders_by_year", d)
+      val out = Tables.scratch("s13_orders_by_year", d)
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .repartition(col("o_year"))
         .write.mode("overwrite").partitionBy("o_year").parquet(out)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
       s.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$out'")
       s.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
       val dim = s.range(1992, 1999)
@@ -154,15 +150,15 @@ object Ingest {
     }),
 
     "s6b_partition_pruned_read" -> ((s, d) => {
-      val out = Tables.scratch("graft_s6b_orders_by_year")
+      val tbl = Tables.freshTable(s, "s6b_orders_by_year", d)
+      val out = Tables.scratch("s6b_orders_by_year", d)
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .repartition(col("o_year"))
         .write.mode("overwrite").partitionBy("o_year").parquet(out)
-      s.sql("DROP TABLE IF EXISTS s6b_orders_by_year")
-      s.sql(s"CREATE TABLE s6b_orders_by_year USING parquet LOCATION '$out'")
-      s.sql("ALTER TABLE s6b_orders_by_year RECOVER PARTITIONS")
-      s.table("s6b_orders_by_year")
+      s.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$out'")
+      s.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
+      s.table(tbl)
         .filter(col("o_year") === 1997)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
@@ -180,29 +176,27 @@ object Ingest {
     // threshold — bucketing is the answer when BOTH sides are big).
     // Oracle recomputes from the raw tables: layout must not change
     // values. NOTE: timings of this entry measure layout BUILD + join —
-    // both bucketed tables are written per invocation; table/path names
-    // derive from the data dir, so sessions over different fixtures
-    // don't clobber each other (ADVICE r8).
+    // both bucketed tables are written per invocation.
     "s11_bucketed_join" -> ((s, d) => {
       val buckets = s11Buckets(Tables.lineitem(s, d)
         .queryExecution.optimizedPlan.stats.sizeInBytes)
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
       def bucketed(df: org.apache.spark.sql.DataFrame, key: String,
-          table: String, path: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $table")
+          entry: String): String = {
+        val table = Tables.freshTable(s, entry, d)
         df.repartition(buckets, col(key)) // one file per bucket → sorted scans
           .write.mode("overwrite")
           .bucketBy(buckets, key).sortBy(key)
-          .option("path", path).saveAsTable(table)
+          .option("path", Tables.scratch(entry, d)).saveAsTable(table)
+        table
       }
-      bucketed(Tables.orders(s, d)
+      val orders = bucketed(Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority")),
-        "o_orderkey", s"s11_orders_b_$tag", Tables.scratch(s"graft_s11_orders_b_$tag"))
-      bucketed(Tables.lineitem(s, d)
+        "o_orderkey", "s11_orders_b")
+      val lineitem = bucketed(Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_extendedprice")),
-        "l_orderkey", s"s11_lineitem_b_$tag", Tables.scratch(s"graft_s11_lineitem_b_$tag"))
-      s.table(s"s11_orders_b_$tag").hint("merge")
-        .join(s.table(s"s11_lineitem_b_$tag"),
+        "l_orderkey", "s11_lineitem_b")
+      s.table(orders).hint("merge")
+        .join(s.table(lineitem),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"), dsum(col("l_extendedprice")).as("total"))
@@ -223,8 +217,7 @@ object Ingest {
     // field being non-null. Per-line work only — corrupt handling adds
     // no shuffle and scales with the scan.
     "s12_corrupt_ndjson" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = Tables.scratch(s"graft_s12_dirty_json_$tag")
+      val out = Tables.scratch("s12_dirty_json", d)
       Tables.documents(s, d)
         .select(when(col("doc_id") % 7 === 0,
             concat(lit("{\"doc_id\": "), col("doc_id").cast(StringType),
@@ -250,8 +243,8 @@ object Ingest {
 
     // S7: the paper's batch run on the sample (golden-file spec owns the
     // exact bytes; here the written dir is re-read and game blocks counted).
-    "s7_pgn_sink" -> ((s, _) => {
-      val out = Tables.scratch("graft_s7_pgn")
+    "s7_pgn_sink" -> ((s, d) => {
+      val out = Tables.scratch("s7_pgn", d)
       ChessPipeline.run(s, ChessPipeline.samplePath, out)
       s.read.text(out)
         .agg(count(lit(1)).as("n_lines"),
@@ -262,8 +255,8 @@ object Ingest {
     // S7b: PGN DSv2 ROUND TRIP — write format("pgn"), read it back
     // through the PGN reader (block parser, one partition per file,
     // column pruning pushed into the scan). "?" tags round-trip to NULL.
-    "s7b_pgn_roundtrip" -> ((s, _) => {
-      val out = Tables.scratch("graft_s7b_pgn_dsv2")
+    "s7b_pgn_roundtrip" -> ((s, d) => {
+      val out = Tables.scratch("s7b_pgn_dsv2", d)
       ChessPipeline.puzzleGames(s, ChessPipeline.samplePath).toDF()
         .write.format("pgn").mode("overwrite").save(out)
       s.read.format("pgn").load(out)
@@ -277,7 +270,7 @@ object Ingest {
     // must equal the same aggregate computed from the parquet source
     // (DuckDB has no ORC reader, so fidelity is checked through values).
     "s9_orc_roundtrip" -> ((s, d) => {
-      val out = Tables.scratch("graft_s9_lineitem_orc")
+      val out = Tables.scratch("s9_lineitem_orc", d)
       // fanOut BEFORE the write: a one-split source serializes the ORC
       // encode onto 1-2 tasks AND leaves 1-2 files for the re-read to
       // parse serially — writing from N tasks parallelizes both halves
@@ -297,7 +290,7 @@ object Ingest {
     // from the old batch surface the new column as NULL. The append-only
     // reality of long-lived datasets: schemas grow, readers must cope.
     "s10_schema_merge" -> ((s, d) => {
-      val out = Tables.scratch("graft_s10_evolving")
+      val out = Tables.scratch("s10_evolving", d)
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderdate"))
       base.filter(col("o_orderkey") % 2 === 0)
@@ -331,8 +324,7 @@ object Ingest {
     // stays on the scan so results never depend on manifest precision.
     // IngestSpec asserts the skip actually happened (matched < total).
     "s14_stats_skipping" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = Tables.scratch(s"graft_s14_lineitem_skip_$tag")
+      val out = Tables.scratch("s14_lineitem_skip", d)
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_shipdate"))
@@ -362,8 +354,7 @@ object Ingest {
     // untouched. Oracle recomputes both generations from the source
     // table, so the hash pins the NULL-fill semantics exactly.
     "s15_schema_evolution" -> ((s, d) => {
-      val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-      val out = Tables.scratch(s"graft_s15_evolved_$tag")
+      val out = Tables.scratch("s15_evolved", d)
       val orders = Tables.orders(s, d)
         .withColumn("cents",
           expr("CAST(ROUND(o_totalprice * 1e2, 0) AS BIGINT)"))

@@ -19,21 +19,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Streams {
 
-  /** Scratch-directory tag for a dataset dir: the sanitized-path
-    * suffix (human-readable in scratch listings) PLUS an 8-hex SHA-1 of
-    * the FULL path (ADVICE r15 — two dataset roots sharing a 24-char
-    * sanitized tail would otherwise map to the same feed dir and
-    * interleave staged batches). The directories it names live under
-    * the per-JVM [[graft.Tables.scratch]] root, so two JVMs on the same
-    * dataset never share them.
-    */
-  private def dirTag(d: String): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
-    s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24) + s"_$sha"
-  }
-
   /** Write the b-th SINGLE-FILE batch of `feed` from lines already in
     * hand on the driver, with an explicitly stamped ascending
     * modification time. The file source orders new files by
@@ -481,12 +466,10 @@ object Streams {
 
   /** The rig of the oracle-graded streaming entries t22–t39, written
     * once. [[scenario]] is the only place that
-    *  - owns the entry's scratch directory — [[graft.Tables.scratch]] (one
-    *    root per JVM) named by [[dirTag]] (one directory per dataset) —
-    *    and empties it before use. The catalog table an entry may keep
-    *    there ([[Scenario.table]]) is dropped BEFORE the directory goes:
-    *    the reverse order makes the catalog's drop-time listing log a
-    *    spurious FileNotFound;
+    *  - resets the entry's scratch directory and the catalog table it
+    *    may keep there ([[Scenario.table]]) through
+    *    [[graft.Tables.freshTable]] (one root per JVM, one directory per
+    *    dataset);
     *  - stages feeds as mtime-pinned single-file batches ([[stageLines]])
     *    and opens each as a file stream of one file per trigger;
     *  - starts, drains and stops every query, and for exactly that span
@@ -515,18 +498,17 @@ object Streams {
   private[graft] def scenario(name: String, parts: Int, rocksDb: Boolean = false)(
       body: (SparkSession, String, Scenario) => DataFrame): (String, graft.Tables.Q) =
     name -> ((s, d) => {
-      val sc = new Scenario(s, name.takeWhile(_ != '_'), dirTag(d), parts, rocksDb)
-      s.sql(s"DROP TABLE IF EXISTS ${sc.table}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sc.dir))
+      val tag = name.takeWhile(_ != '_')
+      val sc = new Scenario(s, tag, graft.Tables.freshTable(s, tag, d),
+        graft.Tables.scratch(tag, d), parts, rocksDb)
       body(s, d, sc)
     })
 
-  /** One run of a [[scenario]]: its scratch paths, feeds and sinks. */
-  private[graft] final class Scenario(s: SparkSession, tag: String, dtag: String,
-      parts: Int, rocksDb: Boolean) {
-    val dir: String = graft.Tables.scratch(s"${tag}_$dtag")
-    /** The entry's catalog table, if it keeps one, located under [[dir]]. */
-    val table: String = s"${tag}_$dtag"
+  /** One run of a [[scenario]]: its scratch paths, feeds and sinks.
+    * `table` is the entry's catalog table, if it keeps one, located
+    * under `dir`. */
+  private[graft] final class Scenario(s: SparkSession, tag: String,
+      val table: String, val dir: String, parts: Int, rocksDb: Boolean) {
 
     def path(sub: String): String = s"$dir/$sub"
 

@@ -267,11 +267,12 @@ class PlanSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   }
 
   test("M7 compaction collapses the fragmented file count") {
-    graft.operators.PipelineOps.queries("m7_compact")(spark, sf("sf0.001")).collect()
-    def parts(name: String): Long = java.nio.file.Files
-      .list(java.nio.file.Paths.get(Tables.scratch(name)))
+    val d = sf("sf0.001")
+    graft.operators.PipelineOps.queries("m7_compact")(spark, d).collect()
+    def parts(entry: String): Long = java.nio.file.Files
+      .list(java.nio.file.Paths.get(Tables.scratch(entry, d)))
       .filter(p => p.toString.endsWith(".parquet")).count()
-    val (frag, compact) = (parts("graft_m7_fragmented"), parts("graft_m7_compacted"))
+    val (frag, compact) = (parts("m7_fragmented"), parts("m7_compacted"))
     assert(frag > compact, s"fragmented=$frag compacted=$compact")
     assert(compact >= 1)
   }
@@ -528,8 +529,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(got.getDouble(2) === want.getDouble(2))
     // skip evidence: the 3-month manifest match is a strict subset of
     // the 16-file range-clustered layout (7 years of shipdates)
-    val tag = s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-    val out = java.nio.file.Paths.get(Tables.scratch(s"graft_s14_lineitem_skip_$tag"))
+    val out = java.nio.file.Paths.get(Tables.scratch("s14_lineitem_skip", d))
     val total = out.toFile.listFiles().count(_.getName.endsWith(".parquet"))
     val matched = graft.sources.Ingest.manifestMatches(spark, out.toString, lo, hi)
     assert(matched.nonEmpty && matched.size < total,

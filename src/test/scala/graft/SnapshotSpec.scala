@@ -10,9 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SnapshotSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
-  private def tag(d: String) =
-    s"sf${d.replaceAll("[^0-9a-zA-Z]", "_")}".takeRight(24)
-
   private def parquetFiles(dir: String): Set[String] = {
     val fs = new java.io.File(dir).listFiles()
     if (fs == null) Set.empty
@@ -22,7 +19,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   test("m37: the post-expire directory is exactly the retained manifest " +
       "(shared files kept, expired-only files deleted)") {
     val d = sf("sf0.001")
-    val dir = Tables.scratch(s"graft_m37_table_${tag(d)}")
+    val dir = Tables.scratch("m37_table", d)
     PipelineOps.queries("m37_snapshot_expire")(spark, d).collect()
     // construction: v1 = 2 files (A, shared with v3), B = 2 files
     // (expired-only, must be deleted), C = 1 compacted file → the
@@ -46,7 +43,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   test("m38: rollback hides the corrupt delta while its files remain on " +
       "disk (metadata undo, not a data rewrite)") {
     val d = sf("sf0.001")
-    val dir = Tables.scratch(s"graft_m38_table_${tag(d)}")
+    val dir = Tables.scratch("m38_table", d)
     val out = PipelineOps.queries("m38_snapshot_rollback")(spark, d)
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     // the rolled-back read sees ONLY 1995
@@ -62,7 +59,7 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase with TempDirs {
   test("m39: the torn generation exists on disk but no commit names it — " +
       "the reader serves the last committed version of BOTH tables") {
     val d = sf("sf0.001")
-    val base = Tables.scratch(s"graft_m39_${tag(d)}")
+    val base = Tables.scratch("m39", d)
     val out = PipelineOps.queries("m39_multi_table_commit")(spark, d).collect()
     // snapshot consistency: re-aggregated base equals stored rollup in
     // every segment (a torn or mixed read breaks one side)

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * sweep loads EVERY fixture table at EVERY scale factor, so any future
   * physical-type assumption that drifts out from under `Tables` fails
   * here before it fails a round.
+  *
+  * Also the scratch rule (Tables' scaladoc): entry outputs keyed by
+  * entry and dataset, reset before each write, and named only by
+  * `Tables`.
   */
 class TablesSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
@@ -53,5 +61,58 @@ class TablesSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     val diff = rebuilt.join(cur.withColumnRenamed("ts", "ts0"), "event_id")
       .filter(col("ts") =!= col("ts0")).count()
     assert(diff == 0, s"$diff rows differ between nanos-long and µs paths")
+  }
+
+  test("dataset roots sharing a sanitized tail get different scratch and table names") {
+    val (d1, d2) = ("/mnt/a/data/root/testdata/sf0.01", "/mnt/b/data/root/testdata/sf0.01")
+    // the readable part alone collides; only the path hash tells them apart
+    assert(Tables.dataTag(d1).dropRight(9) === Tables.dataTag(d2).dropRight(9))
+    assert(Tables.scratch("m32_table", d1) !== Tables.scratch("m32_table", d2))
+    val (t1, t2) = (Tables.freshTable(spark, "sql11_order_summary", d1),
+      Tables.freshTable(spark, "sql11_order_summary", d2))
+    assert(t1 !== t2)
+    // a table and its directory share one name
+    assert(Paths.get(Tables.scratch("sql11_order_summary", d1)).getFileName.toString === t1)
+  }
+
+  test("freshTable drops the entry's table and empties its directory") {
+    val d = sf("sf0.001")
+    val tbl = Tables.freshTable(spark, "tables_spec_fresh", d)
+    val dir = Tables.scratch("tables_spec_fresh", d)
+    spark.range(3).write.option("path", dir).saveAsTable(tbl)
+    assert(spark.catalog.tableExists(tbl))
+    assert(Tables.freshTable(spark, "tables_spec_fresh", d) === tbl)
+    assert(!spark.catalog.tableExists(tbl))
+    assert(!Files.exists(Paths.get(dir)))
+  }
+
+  test("a table entry and a directory entry return equal rows when run twice") {
+    val d = sf("sf0.001")
+    for (name <- Seq("sql11_ctas", "m32_time_travel")) {
+      def run(): Seq[String] =
+        SparkEntry.queries(name)(spark, d).collect().map(_.toString).toSeq.sorted
+      val first = run()
+      assert(first.nonEmpty, name)
+      assert(run() === first, name)
+    }
+  }
+
+  // one-argument Tables.scratch: a name the module built itself
+  private val OneArgScratch = """Tables\.scratch\((?:[^(),]|\([^()]*\))*\)""".r
+
+  test("no entry module builds a scratch name or sanitizes a dataset path itself") {
+    assert(OneArgScratch.findFirstIn("""Tables.scratch(s"graft_m7_${tag(d)}")""").nonEmpty)
+    assert(OneArgScratch.findFirstIn("""Tables.scratch("m7_compacted", d)""").isEmpty)
+    val files = Seq("operators", "sources", "streaming").flatMap { sub =>
+      Files.walk(Paths.get("src/main/scala/graft", sub)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+    }
+    assert(files.size > 10, s"scanned only ${files.size} files")
+    for (f <- files) {
+      val src = Files.readString(f)
+      val hit = OneArgScratch.findFirstIn(src)
+      assert(hit.isEmpty, s"$f: ${hit.mkString} — use Tables.scratch(entry, d)")
+      assert(!src.contains("[^0-9a-zA-Z]"), s"$f sanitizes a path — use Tables.dataTag")
+    }
   }
 }
